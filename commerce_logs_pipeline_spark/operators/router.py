@@ -4,26 +4,21 @@ Reference parity: the extraction service's type dispatch + per-topic fan-out
 (/root/reference/pipeline/extraction/internal/service/service.go:312-344,
 proxy_service.go:280-313, error sink :405-444) and the ingest topic chooser
 (processor.go:36-41). Spark has no native multi-output write, so the router
-is K filtered appends over ONE persisted parsed frame (SURVEY §4 item 4),
-with a conservation invariant  Σ sinks + skips = input  mirroring the
-reference's success-counting of silent skips (service.go:232-235).
+is ONE write partitioned by (category, day, bucket): a sink is the union of
+its category partitions (``write_sinks_single_pass``). The conservation
+invariant  Σ sinks + skips = input  mirrors the reference's success-counting
+of silent skips (service.go:232-235).
 
-Scale notes: the parsed frame is persisted once (MEMORY_AND_DISK) so the K
-sink writes each reuse the same parse work instead of re-scanning 100 TB;
-each sink write is partitioned by (day, bucket(conv_id)) — the Iceberg
-``days(ts), bucket(16, conv_id)`` layout — so downstream reads prune.
+Scale notes: the (day, bucket(conv_id)) partitions are the Iceberg
+``days(ts), bucket(16, conv_id)`` layout, so downstream reads prune.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
-
-from ..schemas import CATEGORIES
 
 # Sink name -> categories routed into it (FIXTURES.md §4 routed_counts).
 DEFAULT_SINKS: dict[str, list[str]] = {
@@ -48,62 +43,28 @@ def with_partition_cols(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     )
 
 
-@dataclass
-class RouteResult:
-    parsed: DataFrame
-    sink_frames: dict[str, DataFrame]
-    counts: dict[str, int] = field(default_factory=dict)
-
-
-def route(
-    parsed: DataFrame,
-    sinks: dict[str, list[str]] | None = None,
-    persist: bool = True,
-) -> RouteResult:
-    """Split the parsed frame into per-sink frames (lazy; no action run)."""
-    sinks = sinks or DEFAULT_SINKS
-    known = {c for cats in sinks.values() for c in cats} | {"skipped"}
-    unknown = [c for c in known if c not in CATEGORIES]
-    if unknown:
-        raise ValueError(f"unknown categories in sink spec: {unknown}")
-    if persist:
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    frames = {
-        name: parsed.filter(F.col("category").isin(cats))
-        for name, cats in sinks.items()
-    }
-    return RouteResult(parsed=parsed, sink_frames=frames)
-
-
 def routed_counts(parsed: DataFrame) -> DataFrame:
     """(category, n) — one job computes every sink/skip count at once."""
     return parsed.groupBy("category").agg(F.count("*").alias("n"))
 
 
-def check_conservation(parsed: DataFrame, sinks: dict[str, list[str]] | None = None
+def check_conservation(by_cat: dict[str, int],
+                       sinks: dict[str, list[str]] | None = None
                        ) -> dict[str, int]:
-    """Assert rows(input) == Σ rows(sinks) + rows(skipped); return counts.
-
-    Uses the single grouped count — not one action per sink — so the check
-    is O(one pass) even at full scale.
-    """
+    """Assert Σ rows(sinks) + rows(skipped) == Σ rows over ``by_cat``
+    (category -> row count, e.g. the router counts observed on the write
+    job) and return the per-sink counts plus ``skipped`` and ``total``."""
     sinks = sinks or DEFAULT_SINKS
-    by_cat = {r["category"]: r["n"] for r in routed_counts(parsed).collect()}
-    total = sum(by_cat.values())
-    routed = sum(
-        by_cat.get(c, 0) for cats in sinks.values() for c in cats
-    )
-    skipped = by_cat.get("skipped", 0)
-    unrouted = total - routed - skipped
-    if unrouted != 0:
-        raise AssertionError(
-            f"router conservation violated: total={total} routed={routed} "
-            f"skipped={skipped} unrouted={unrouted} by_cat={by_cat}"
-        )
     out = {f"sink:{name}": sum(by_cat.get(c, 0) for c in cats)
            for name, cats in sinks.items()}
-    out["skipped"] = skipped
-    out["total"] = total
+    out["skipped"] = by_cat.get("skipped", 0)
+    out["total"] = sum(by_cat.values())
+    routed = sum(out[f"sink:{n}"] for n in sinks)
+    if routed + out["skipped"] != out["total"]:
+        raise AssertionError(
+            f"router conservation violated: total={out['total']} "
+            f"routed={routed} skipped={out['skipped']} by_cat={by_cat}"
+        )
     return out
 
 
@@ -544,31 +505,6 @@ def vacuum_superseded(spark, pipeline_base: str, compacted_run_id: str
             fs_delete(spark, d)
             removed.append(d)
     return removed
-
-
-def write_sinks(
-    result: RouteResult,
-    base_path: str,
-    mode: str = "overwrite",
-    n_buckets: int = N_BUCKETS,
-) -> dict[str, str]:
-    """Write each sink frame as parquet partitioned by (day, bucket).
-
-    With ``spark.sql.sources.partitionOverwriteMode=dynamic`` an overwrite
-    only replaces partitions present in the incoming frame — the parquet
-    stand-in for an Iceberg partition-level commit (idempotent re-runs).
-    """
-    paths: dict[str, str] = {}
-    for name, frame in result.sink_frames.items():
-        path = f"{base_path}/{name}"
-        (
-            with_partition_cols(frame, n_buckets)
-            .write.mode(mode)
-            .partitionBy("day", "bucket")
-            .parquet(path)
-        )
-        paths[name] = path
-    return paths
 
 
 def partition_file_stats(

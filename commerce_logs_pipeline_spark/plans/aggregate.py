@@ -4,7 +4,8 @@ windows, top-k — the Spark expression of the reference's aggregate surface
 
 Scale notes: every aggregate here is a hash aggregate with map-side partial
 aggregation (Spark does partial/final automatically — the analog of the
-reference's per-consumer fold + compacted-state merge). Window functions
+reference's per-consumer fold). The aggregates cover the frame they are
+given; nothing merges them across runs. Window functions
 partition by conv_id, the same key the sinks are bucketed by, so AQE can
 often reuse the exchange. Hot-key conv_ids are handled by the salted
 two-phase variant in operators/skew.py.

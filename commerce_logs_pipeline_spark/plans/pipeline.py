@@ -7,17 +7,18 @@ one DataFrame DAG per run instead of long-running Kafka consumers.
 
 Execution shape (exactly two passes over the data):
 
-  PASS 1 (map-only + one write):
+  run_pipeline (batch face; the stream's foreachBatch replaces it):
     input (day/bucket partitioned)
       -> anti-join closed partitions from the lineage manifest   [resume]
       -> vectorized parse kernel (no shuffle)                    [parse]
       -> broadcast joins with role/tool dims (no shuffle)        [enrich]
-      -> ONE write partitioned by (category, day, bucket)        [route]
 
-  PASS 2 (columnar, pruned):
-    read back the routed parquet — scans touch only the few columns each
-    aggregate needs (ReadSchema pruning), not the wide text payloads —
-      -> routed counts + conservation check                      [metrics]
+  commit_run (shared by batch and stream):
+    PASS 1 — ONE write partitioned by (category, day, bucket),
+      with routed counts observed on the same job               [route]
+      -> conservation check on the observed counts               [metrics]
+    PASS 2 — read back the run's routed parquet; scans touch only the
+    few columns each consumer needs, not the wide text payloads
       -> grouped/window aggregates                               [aggregate]
       -> per-(day,bucket) completion events -> manifest append   [checkpoint]
 
@@ -30,22 +31,19 @@ cheaper past trivial scale, and the routed table IS the product anyway.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.parse import parse_transcripts
 from ..schemas import CATEGORIES
-from ..util import ensure_min_partitions
+from ..util import ensure_min_partitions, fs_glob
 from ..operators.router import (
-    DEFAULT_SINKS,
     check_conservation,
-    route,
-    routed_counts,
     with_partition_cols,
-    write_sinks,
     write_sinks_single_pass,
 )
 from .aggregate import (
@@ -64,24 +62,148 @@ class PipelineReport:
     counts: dict[str, int]
     sink_paths: dict[str, str]
     elapsed_sec: float
-    turns_per_sec: float
     resumed_partitions_skipped: bool = False
     extras: dict = field(default_factory=dict)
 
+    @property
+    def turns_per_sec(self) -> float:
+        return self.rows_in / self.elapsed_sec if self.elapsed_sec > 0 else 0.0
 
-def _counts_from_by_cat(by_cat: dict[str, int],
-                        sinks: dict[str, list[str]]) -> dict[str, int]:
-    total = sum(by_cat.values())
-    out = {f"sink:{name}": sum(by_cat.get(c, 0) for c in cats)
-           for name, cats in sinks.items()}
-    out["skipped"] = by_cat.get("skipped", 0)
-    out["total"] = total
-    routed = sum(out[f"sink:{n}"] for n in sinks)
-    if routed + out["skipped"] != total:
-        raise AssertionError(
-            f"router conservation violated: {by_cat} routed={routed}"
+
+def _noop_report(run_id: str, t0: float) -> PipelineReport:
+    return PipelineReport(
+        run_id=run_id, rows_in=0, counts={}, sink_paths={},
+        elapsed_sec=time.monotonic() - t0, resumed_partitions_skipped=True,
+    )
+
+
+# the columns pass 2 reads back: the aggregates' and completion events'
+# inputs, never the wide text payloads
+SLIM_COLS = ["conv_id", "turn_idx", "role", "ts", "category", "tool_name",
+             "tool_status", "tool_latency_ms", "day", "bucket"]
+
+
+def _write_aggregates(routed: DataFrame, base_path: str,
+                      phases: dict[str, float]) -> None:
+    """The three aggregates are independent consumers of the same
+    (persisted) slim scan: submit them from a small thread pool so each
+    job's straggler tail is back-filled by the next job's tasks (Spark's
+    scheduler runs concurrently submitted jobs side by side). Cache fill
+    is safe under concurrency — BlockManager serializes per-partition
+    computes. Job descriptions are thread-local, so the UI stays
+    labeled."""
+
+    def _write_agg(item):
+        name, frame = item
+        ta = time.monotonic()
+        frame.write.mode("overwrite").parquet(f"{base_path}/agg/{name}")
+        return name, round(time.monotonic() - ta, 2)
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        for name, sec in pool.map(
+            _write_agg,
+            [
+                ("conv_turn_counts", conv_turn_counts(routed)),
+                ("tool_rates", per_tool_call_rates(routed)),
+                ("hourly_errors", hourly_error_rollup(routed)),
+            ],
+        ):
+            phases[f"agg_{name}"] = sec
+
+
+def commit_run(
+    enriched: DataFrame,
+    base_path: str,
+    run_id: str,
+    status: str = "closed",
+    write_aggregates: bool = True,
+    superseded_asof: datetime | None = None,
+) -> PipelineReport:
+    """Commit a parsed, enriched frame as run ``run_id`` under
+    ``base_path`` — the one commit path of batch runs and stream
+    micro-batches alike:
+
+    1. PASS 1: one write into the run's own ``sinks/routed/runid=`` dir,
+       with the router counts attached as OBSERVED METRICS on the same job
+       (A4 metrics-collector analog, factories.go:112-139) — zero extra
+       jobs for the conservation check.
+    2. PASS 2: a slim read-back of that dir, persisted only when the
+       aggregates share it with the completion events.
+    3. the aggregates, when ``write_aggregates``.
+    4. per-(day, bucket) completion events with ``status`` ("open" keeps
+       the partition resumable mid-way, from the chunk's turn watermark),
+       stamped with ``superseded_asof`` for self-contained runs, appended
+       to the manifest: the commit point that makes the run visible.
+
+    Delivery is recorded only after the write (worker.go:416-509): a
+    crash before the append leaves an invisible dir, and a replayed
+    run_id overwrites its own dir while the manifest fold dedupes its
+    events on run_id. An empty frame writes no partition dir and commits
+    nothing.
+    """
+    t0 = time.monotonic()
+    spark = enriched.sparkSession
+    phases: dict[str, float] = {}
+    obs = Observation(f"router_counts_{run_id}")
+    observed = enriched.observe(
+        obs,
+        *[
+            F.sum(F.when(F.col("category") == c, 1).otherwise(0)).alias(c)
+            for c in CATEGORIES
+        ],
+    )
+    sink_paths = write_sinks_single_pass(
+        observed, f"{base_path}/sinks", run_id=run_id
+    )
+    phases["pass1_parse_route_write"] = round(time.monotonic() - t0, 2)
+    run_dir = f"{base_path}/sinks/routed/runid={run_id}"
+    # an empty input optimizes the observed aggregate away (the
+    # observation then holds no row) and leaves a dir without data files
+    if not fs_glob(spark, f"{run_dir}/category=*"):
+        return _noop_report(run_id, t0)
+
+    tp = time.monotonic()
+    counts = check_conservation({c: n for c, n in obs.get.items() if n})
+    routed = (
+        spark.read.option("basePath", f"{base_path}/sinks/routed")
+        .parquet(run_dir)
+        .select(*SLIM_COLS)
+    )
+    if write_aggregates:
+        # 4 consumers share one cached scan; A/B on a 4x8 cluster (12M
+        # turns): aggregates+manifest 4.3-5.6 s cached vs 6.5-13.2 s not.
+        # A lone consumer gains nothing from the cache store.
+        routed = routed.persist()
+    phases["pass2_read_counts"] = round(time.monotonic() - tp, 2)
+    try:
+        tp = time.monotonic()
+        if write_aggregates:
+            _write_aggregates(routed, base_path, phases)
+        phases["aggregates"] = round(time.monotonic() - tp, 2)
+
+        tp = time.monotonic()
+        # partition inference reads day= back as a date: re-derive the
+        # writer's string day and bucket
+        events = completion_events(
+            with_partition_cols(routed), run_id, status=status
         )
-    return out
+        if superseded_asof is not None:
+            events = events.withColumn(
+                "superseded_asof", F.lit(superseded_asof).cast("timestamp")
+            )
+        ManifestStore(f"{base_path}/_manifest").append(events)
+        phases["manifest"] = round(time.monotonic() - tp, 2)
+    finally:
+        routed.unpersist()
+
+    return PipelineReport(
+        run_id=run_id,
+        rows_in=counts["total"],
+        counts=counts,
+        sink_paths=sink_paths,
+        elapsed_sec=time.monotonic() - t0,
+        extras={"phases": phases},
+    )
 
 
 def run_pipeline(
@@ -92,16 +214,15 @@ def run_pipeline(
     resume: bool = True,
     write_aggregates: bool = True,
     use_pandas_grok: bool = True,
-    single_pass_router: bool = True,
     close_partitions: bool = True,
-    pass2_persist: bool = True,
 ) -> PipelineReport:
     """Run the full pipeline over ``transcripts``; outputs under ``base_path``.
 
-    Idempotence contract: the routed write uses dynamic partition overwrite
-    keyed by (category, day, bucket); completion events append with a
-    run_id that the manifest fold dedupes — a crashed run re-executed on
-    the same inputs converges to the same state (X3/X9/X10 in SURVEY §4).
+    Resume skips what the manifest already holds, then parse and enrich
+    feed ``commit_run``. Idempotence contract: each run writes its own
+    ``runid=`` snapshot dir and the manifest append is its commit point —
+    a crashed run re-executed on the same inputs converges to the same
+    state (X3/X9/X10 in SURVEY §4).
     """
     t0 = time.monotonic()
     # Self-contained runs record the instant they started reading their
@@ -117,7 +238,6 @@ def run_pipeline(
     # with the runs it superseded. Caller-supplied run_ids declare their
     # own intent (streaming batch-N replays are chunk appends).
     run_id = run_id or (new_run_id() if resume else "full" + new_run_id())
-    manifest = ManifestStore(f"{base_path}/_manifest")
 
     # Feed and BALANCE every core: compressed text inputs can collapse to
     # few read splits, and real inputs are Zipf-skewed by conversation — a
@@ -129,154 +249,30 @@ def run_pipeline(
     # raggedness matters as much as skew). No-op at real scale where
     # inputs carry balanced >= 2x-cores splits.
     cores = spark.sparkContext.defaultParallelism
-    transcripts = ensure_min_partitions(transcripts, cores * 2)
-
-    part_input = with_partition_cols(transcripts)
-    todo = (
-        manifest.pending(
-            spark, part_input, routed_path=f"{base_path}/sinks/routed"
-        )
-        if resume
-        else part_input
-    )
-
+    todo = with_partition_cols(ensure_min_partitions(transcripts, cores * 2))
     if resume:
+        todo = ManifestStore(f"{base_path}/_manifest").pending(
+            spark, todo, routed_path=f"{base_path}/sinks/routed"
+        )
         # cheap pre-flight: which (day, bucket) partitions does this run
         # own? (columnar scan of two small columns; no parse). Empty ->
         # resume no-op without touching the parse kernel at all.
-        pend = todo.select("day", "bucket").distinct()
-        pending_parts = pend.collect()
-        if not pending_parts:
-            return PipelineReport(
-                run_id=run_id, rows_in=0, counts={}, sink_paths={},
-                elapsed_sec=time.monotonic() - t0, turns_per_sec=0.0,
-                resumed_partitions_skipped=True,
-            )
-    else:
-        pend = None
+        if not todo.select("day", "bucket").distinct().collect():
+            return _noop_report(run_id, t0)
 
-    parsed = parse_transcripts(todo, use_pandas_grok=use_pandas_grok)
-    enriched = enrich_with_default_dims(parsed)
-
-    phases: dict[str, float] = {}
-    if single_pass_router:
-        # PASS 1: one partitioned write into this run's snapshot dir, with
-        # router counts attached as OBSERVED METRICS on the same job (A4
-        # metrics-collector analog, factories.go:112-139) — zero extra
-        # jobs/scans for the conservation check.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"router_counts_{run_id}")
-        observed = enriched.observe(
-            obs,
-            *[
-                F.sum(F.when(F.col("category") == c, 1).otherwise(0)).alias(c)
-                for c in CATEGORIES
-            ],
-        )
-        tp = time.monotonic()
-        sink_paths = write_sinks_single_pass(
-            observed, f"{base_path}/sinks", run_id=run_id
-        )
-        phases["pass1_parse_route_write"] = round(time.monotonic() - tp, 2)
-        tp = time.monotonic()
-        by_cat = {c: n for c, n in obs.get.items() if n}
-        # PASS 2: aggregates + manifest read only the slim column set from
-        # this run's snapshot dir (no manifest needed for our own data).
-        slim_cols = ["conv_id", "turn_idx", "role", "ts", "category",
-                     "tool_name", "tool_status", "tool_latency_ms",
-                     "day", "bucket"]
-        # pass2_persist: the 4 pass-2 consumers (3 aggregates + completion
-        # events) share one cached slim scan. A/B on the standalone 4x8
-        # cluster (12M turns, both orders): persist wins summed
-        # aggregates+manifest 4.3-5.6 s vs 6.5-13.2 s — the cache store
-        # pays for itself by the 3rd consumer even on tmpfs storage.
-        # The knob exists because the margin inverts if pass 2 ever has a
-        # single consumer (memory pressure buys nothing then).
-        routed = (
-            spark.read.option("basePath", f"{base_path}/sinks/routed")
-            .parquet(f"{base_path}/sinks/routed/runid={run_id}")
-            .select(*slim_cols)
-        )
-        if pass2_persist:
-            routed = routed.persist()
-        phases["pass2_read_counts"] = round(time.monotonic() - tp, 2)
-        rows_in = sum(by_cat.values())
-        if rows_in == 0:
-            return PipelineReport(
-                run_id=run_id, rows_in=0, counts={}, sink_paths={},
-                elapsed_sec=time.monotonic() - t0, turns_per_sec=0.0,
-                resumed_partitions_skipped=True,
-            )
-        counts = _counts_from_by_cat(by_cat, DEFAULT_SINKS)
-        agg_source = routed
-    else:
-        result = route(enriched, DEFAULT_SINKS, persist=True)
-        rows_in = result.parsed.count()
-        if rows_in == 0:
-            return PipelineReport(
-                run_id=run_id, rows_in=0, counts={}, sink_paths={},
-                elapsed_sec=time.monotonic() - t0, turns_per_sec=0.0,
-                resumed_partitions_skipped=True,
-            )
-        counts = check_conservation(result.parsed, DEFAULT_SINKS)
-        sink_paths = write_sinks(result, f"{base_path}/sinks")
-        agg_source = result.parsed
-
-    tp = time.monotonic()
-    if write_aggregates:
-        # The three aggregates are independent consumers of the same
-        # (persisted) slim scan: submit them from a small thread pool so
-        # each job's straggler tail is back-filled by the next job's
-        # tasks (guide §2.6 overlap-independent-jobs; Spark's scheduler
-        # is fully concurrent, actions were only sequential because this
-        # loop called them sequentially). Cache fill is safe under
-        # concurrency — BlockManager serializes per-partition computes.
-        # Job descriptions are thread-local, so the UI stays labeled.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_agg(item):
-            name, frame = item
-            ta = time.monotonic()
-            frame.write.mode("overwrite").parquet(f"{base_path}/agg/{name}")
-            return name, round(time.monotonic() - ta, 2)
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for name, sec in pool.map(
-                _write_agg,
-                [
-                    ("conv_turn_counts", conv_turn_counts(agg_source)),
-                    ("tool_rates", per_tool_call_rates(agg_source)),
-                    ("hourly_errors", hourly_error_rollup(agg_source)),
-                ],
-            ):
-                phases[f"agg_{name}"] = sec
-    phases["aggregates"] = round(time.monotonic() - tp, 2)
-
-    tp = time.monotonic()
+    enriched = enrich_with_default_dims(
+        parse_transcripts(todo, use_pandas_grok=use_pandas_grok)
+    )
     # close_partitions=False records OPEN events with the chunk's turn
     # watermark: the next resume continues MID-PARTITION from turn > w
     # (the growing-blob tail model, processor.go:86-116); the final chunk
     # closes the latch.
-    events = completion_events(
-        with_partition_cols(agg_source), run_id,
+    report = commit_run(
+        enriched, base_path, run_id,
         status="closed" if close_partitions else "open",
+        write_aggregates=write_aggregates,
+        # a self-contained full reprocess stamps its read boundary
+        superseded_asof=None if resume else read_asof,
     )
-    if not resume:  # self-contained full reprocess: stamp read boundary
-        events = events.withColumn(
-            "superseded_asof", F.lit(read_asof).cast("timestamp")
-        )
-    manifest.append(events)
-    phases["manifest"] = round(time.monotonic() - tp, 2)
-    agg_source.unpersist()
-
-    elapsed = time.monotonic() - t0
-    return PipelineReport(
-        run_id=run_id,
-        rows_in=rows_in,
-        counts=counts,
-        sink_paths=sink_paths,
-        elapsed_sec=elapsed,
-        turns_per_sec=rows_in / elapsed if elapsed > 0 else 0.0,
-        extras={"phases": phases},
-    )
+    report.elapsed_sec = time.monotonic() - t0
+    return report

@@ -12,8 +12,8 @@ Reference parity (/root/reference):
   window: docs/pipeline_design.md:66-70
 - J6 span-event assembly: group partial events by span_id, coalesce fields,
   dedup by (trace_id, span_id): docs/pipeline_design.md:103-115
-- S8 sink: daily indices, doc id = trace_id + span_id -> here an
-  (day-partitioned) parquet/Iceberg table deduped on (trace_id, span_id).
+- S8 sink: daily indices, doc id = trace_id + span_id -> here spans carry
+  a ``day`` column and are deduped on (trace_id, span_id).
 
 Spark shape: correlations are equi/range joins (operators/asof.py), span
 assembly is a coalescing groupBy (first ignorenulls), ids are sha2 hashes
@@ -176,7 +176,3 @@ def assemble_traces(parsed: DataFrame, tolerance_sec: int = 60) -> DataFrame:
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
 
-
-def write_traces(traces: DataFrame, path: str) -> None:
-    """Daily-partitioned trace sink (S8: traces-{...}-yyyy.MM.dd analog)."""
-    traces.write.mode("overwrite").partitionBy("day").parquet(path)

@@ -8,9 +8,9 @@ re-established per query with (conv_id, turn_idx) sorts.
 
 Scale posture: these configs are the local[k] stand-ins for a 1000-executor
 cluster — AQE coalesces/splits shuffle partitions at runtime, Arrow batches
-keep pandas-UDF transfer vectorized, and dynamic partition overwrite gives
-idempotent per-partition re-writes (the Iceberg-commit analog when the
-iceberg runtime jar is absent).
+keep pandas-UDF transfer vectorized, and the v2 committer makes partitioned
+writes commit task-side. Idempotent re-writes come from per-run snapshot dirs
+plus the lineage manifest (operators.router), not from session conf.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEM_MB = 48 << 10
 
 
 def iceberg_jar_available() -> bool:
@@ -54,8 +55,27 @@ def _synthesized_master(environ=os.environ) -> str | None:
         "spark.master"
     ):  # a JVM this process already launched carries a master
         return None
-    cpus = environ.get("SPARK_GRAFT_CPUS", "32")
-    return f"local[{cpus}]"
+    return f"local[{_local_cpus(environ)}]"
+
+
+def _local_cpus(environ=os.environ) -> str:
+    """``$SPARK_GRAFT_CPUS``, else every core of this machine."""
+    return environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def _local_driver_mem(environ=os.environ, meminfo: str = "/proc/meminfo") -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of the machine's MemTotal
+    (the other half is for Python workers, off-heap buffers and the OS),
+    capped at 48g; 48g when MemTotal is unreadable."""
+    if "SPARK_GRAFT_DRIVER_MEM" in environ:
+        return environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, kb // 2048))}m"
 
 
 def build_session(
@@ -67,8 +87,9 @@ def build_session(
 ) -> SparkSession:
     """Build a SparkSession tuned for the pipeline.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    same entry point serves tests, bench at N cores, and bench at 4N cores.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: every
+    core) so the same entry point serves tests, bench at N cores, and bench
+    at 4N cores.
     On a real cluster, pass master=None: spark-submit's --master wins and we
     never override it (detected via the gateway env — see
     ``_synthesized_master`` for why SparkConf alone cannot detect it).
@@ -80,9 +101,7 @@ def build_session(
         # In local mode the driver JVM hosts all executor threads; the 1g
         # default heap GC-thrashes under 32 cores. Size it like the worker
         # it stands in for. On a real cluster spark-submit sets this.
-        b = b.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        b = b.config("spark.driver.memory", _local_driver_mem())
         # Shuffle/spill scratch: this sandbox's /tmp sits on a
         # burst-credit cloud disk with wildly variable throughput; tmpfs
         # is the stand-in for a cluster node's local NVMe.
@@ -104,8 +123,6 @@ def build_session(
         # Arrow for pandas UDFs (the vectorized grok kernel path).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Idempotent per-partition re-writes for checkpoint/resume.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Timestamps in parquet as int64 micros (portable to DuckDB oracle).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # JSON/regex parse is CPU-heavy per byte (snappy text compresses
@@ -113,8 +130,9 @@ def build_session(
         # otherwise a 51 MB compressed input parses on ONE task.
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
-        # task-side commit (v2): avoids the driver serially renaming
-        # thousands of partition-dir outputs after dynamic-partition writes
+        # task-side commit (v2): each task moves its own files into place,
+        # so a write into thousands of partition dirs doesn't end in a
+        # serial rename of every file on the driver
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )

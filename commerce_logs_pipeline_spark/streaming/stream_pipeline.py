@@ -11,16 +11,17 @@ Reference parity (/root/reference):
 - T3 late data: 60-min EOD overlap rescan (service.go:302-328) ->
   ``withWatermark`` bounded lateness.
 - T4 resumable offsets + at-least-once + idempotent keys
-  (worker.go:416-509) -> checkpointLocation + foreachBatch writing with
-  dynamic partition overwrite (replays converge; same discipline as the
-  batch lineage manifest).
+  (worker.go:416-509) -> checkpointLocation + foreachBatch committing each
+  micro-batch through the batch ``commit_run`` under the replay-stable run
+  id ``batch-N`` (a replay overwrites its own snapshot dir; the manifest
+  fold dedupes its events on run_id).
 - T6 stateful fold (blob_state_processor.go:50-96) -> the same fold runs
   in foreachBatch via the batch ManifestStore, keeping one code path.
 
-Scale notes: the streaming plan shares the batch parse/enrich/route
-functions verbatim — foreachBatch hands each micro-batch to the identical
-single-pass router, so throughput characteristics and sink layout match
-the batch engine exactly.
+Scale notes: the streaming plan shares the batch parse/enrich functions
+and commit path verbatim — foreachBatch hands each micro-batch to the
+identical ``commit_run``, so throughput characteristics, sink layout and
+the conservation check match the batch engine exactly.
 """
 
 from __future__ import annotations
@@ -34,9 +35,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.parse import parse_transcripts
-from ..operators.router import write_sinks_single_pass
-from ..plans.checkpoint import ManifestStore, completion_events, new_run_id
 from ..plans.enrich import enrich_with_default_dims
+from ..plans.pipeline import commit_run
 from ..schemas import TRANSCRIPT_SCHEMA
 
 
@@ -174,30 +174,22 @@ def run_streaming_pipeline(
     checkpoint_path: str,
     available_now: bool = True,
 ):
-    """Streaming parse -> enrich -> route with per-batch manifest commits.
-
-    foreachBatch reuses the batch single-pass router, so each micro-batch
-    is one idempotent dynamic-partition write + one manifest append —
-    at-least-once delivery with idempotent replay (T4).
+    """Streaming parse -> enrich -> ``commit_run`` per micro-batch: one
+    snapshot write + one manifest append each, at-least-once delivery with
+    idempotent replay (T4). Micro-batches write no ``agg/*``: each run's
+    aggregates overwrite the previous ones, so they would cover only the
+    latest batch.
     """
     stream = stream_transcripts(spark, input_path)
-    manifest = ManifestStore(f"{base_path}/_manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.router import with_partition_cols
-
-        parsed = enrich_with_default_dims(
-            parse_transcripts(with_partition_cols(batch_df))
-        )
-        # each micro-batch writes its own runid=batch-N snapshot dir;
         # batch_id is STABLE across foreachBatch replays, so a replayed
-        # batch statically overwrites its own dir and the manifest append
-        # dedupes on the same run_id — exactly-once effect from
+        # batch commits under the same run id — exactly-once effect from
         # at-least-once delivery (T4; trace-model.md:50-57 discipline)
-        run_id = f"batch-{batch_id}"
-        write_sinks_single_pass(parsed, f"{base_path}/sinks", run_id=run_id)
-        manifest.append(
-            completion_events(parsed, run_id=run_id, status="open")
+        commit_run(
+            enrich_with_default_dims(parse_transcripts(batch_df)),
+            base_path, f"batch-{batch_id}", status="open",
+            write_aggregates=False,
         )
 
     writer = (

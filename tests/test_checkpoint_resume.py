@@ -11,7 +11,8 @@ from commerce_logs_pipeline_spark.plans.checkpoint import (
     ManifestStore,
     completion_events,
 )
-from commerce_logs_pipeline_spark.plans.pipeline import run_pipeline
+from commerce_logs_pipeline_spark.plans.enrich import enrich_with_default_dims
+from commerce_logs_pipeline_spark.plans.pipeline import commit_run, run_pipeline
 from commerce_logs_pipeline_spark.synth import generate_transcripts
 
 
@@ -44,6 +45,24 @@ def test_manifest_fold_monotonic_and_latched(spark, tmp_path):
     df3 = df1.withColumn("run_id", F.lit("r3"))
     store.append(df3)
     assert store.current_state(spark).collect()[0].status == "closed"
+
+
+def test_empty_input_commits_nothing(spark, tmp_path):
+    """A full run over no rows, and an empty micro-batch committed
+    directly, return the no-op report and append no manifest event."""
+    base = str(tmp_path / "out")
+    rep = run_pipeline(
+        spark, generate_transcripts(spark, 200).limit(0), base, resume=False
+    )
+    assert (rep.rows_in, rep.counts) == (0, {})
+    # empty only at run time (the optimizer cannot prune the plan away)
+    empty = generate_transcripts(spark, 200).filter(F.col("turn_idx") < 0)
+    rep = commit_run(
+        enrich_with_default_dims(parse_transcripts(empty)), base, "batch-0",
+        status="open",
+    )
+    assert (rep.rows_in, rep.counts) == (0, {})
+    assert ManifestStore(f"{base}/_manifest").committed_runs(spark).count() == 0
 
 
 def test_pipeline_end_to_end_and_resume_noop(spark, tmp_path):

@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from commerce_logs_pipeline_spark.operators.router import (
     DEFAULT_SINKS,
     check_conservation,
-    route,
+    read_sink,
     routed_counts,
     with_partition_cols,
+    write_sinks_single_pass,
 )
 from commerce_logs_pipeline_spark.operators.skew import conv_turn_counts_salted
 from commerce_logs_pipeline_spark.plans.aggregate import (
@@ -24,34 +25,56 @@ from commerce_logs_pipeline_spark.plans.aggregate import (
 from commerce_logs_pipeline_spark.plans.enrich import enrich_with_default_dims
 
 
+def _by_cat(parsed):
+    return {r["category"]: r["n"] for r in routed_counts(parsed).collect()}
+
+
 def test_conservation(parsed_10k):
-    counts = check_conservation(parsed_10k)
+    counts = check_conservation(_by_cat(parsed_10k))
     assert counts["total"] == 10_000
     assert counts["sink:http_logs"] > 0
     assert counts["skipped"] > 0
 
 
-def test_each_row_lands_in_exactly_one_sink(parsed_10k):
+def test_conservation_fires_on_unrouted_category(parsed_10k):
+    """A category in no sink that is not 'skipped' breaks the invariant."""
+    by_cat = _by_cat(parsed_10k)
+    sinks = {n: c for n, c in DEFAULT_SINKS.items() if n != "http_logs"}
+    with pytest.raises(AssertionError, match="conservation violated"):
+        check_conservation(by_cat, sinks)
+    with pytest.raises(AssertionError, match="conservation violated"):
+        check_conservation({**by_cat, "unknown": 1})
+
+
+@pytest.fixture(scope="module")
+def sinks_10k(parsed_10k, tmp_path_factory):
+    """parsed_10k routed by the production writer into a temp dir."""
+    base = str(tmp_path_factory.mktemp("sinks10k"))
+    paths = write_sinks_single_pass(parsed_10k, base, run_id="r10k")
+    spark = parsed_10k.sparkSession
+    return {name: read_sink(spark, p) for name, p in paths.items()}, (
+        spark.read.parquet(f"{base}/routed/runid=r10k/category=skipped")
+    )
+
+
+def test_each_row_lands_in_exactly_one_sink(parsed_10k, sinks_10k):
     """Routed-row equality: union of sinks + skipped == input, no dupes."""
-    result = route(parsed_10k, persist=False)
+    sinks, skipped = sinks_10k
     key = ["conv_id", "turn_idx"]
-    frames = list(result.sink_frames.values()) + [
-        parsed_10k.filter(F.col("category") == "skipped")
-    ]
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
+    union = skipped.select(key)
+    for f in sinks.values():
+        union = union.unionByName(f.select(key))
     assert union.count() == 10_000
-    assert union.select(key).distinct().count() == 10_000
+    assert union.distinct().count() == 10_000
     # and the union is exactly the input rows
-    assert union.select(key).exceptAll(parsed_10k.select(key)).count() == 0
+    assert union.exceptAll(parsed_10k.select(key)).count() == 0
 
 
-def test_routed_counts_match_category_sums(parsed_10k):
-    by_cat = {r["category"]: r["n"] for r in routed_counts(parsed_10k).collect()}
-    result = route(parsed_10k, persist=False)
+def test_routed_counts_match_category_sums(parsed_10k, sinks_10k):
+    by_cat = _by_cat(parsed_10k)
+    sinks, _ = sinks_10k
     for name, cats in DEFAULT_SINKS.items():
-        assert result.sink_frames[name].count() == sum(
+        assert sinks[name].count() == sum(
             by_cat.get(c, 0) for c in cats
         ), name
 

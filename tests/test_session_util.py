@@ -2,9 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from commerce_logs_pipeline_spark.session import _synthesized_master
+from commerce_logs_pipeline_spark.session import (
+    _local_cpus,
+    _local_driver_mem,
+    _synthesized_master,
+)
 from commerce_logs_pipeline_spark.util import (
     ensure_min_partitions,
     estimated_scan_partitions,
@@ -28,6 +34,23 @@ def test_synthesized_master_standalone(spark):
     got = _synthesized_master(env)
     # with an attached JVM whose conf has a master, we must not override
     assert got is None or got == "local[7]"
+
+
+def test_local_defaults_sized_from_machine(tmp_path):
+    """Unset env -> local[every core] and half of MemTotal as driver heap,
+    capped at 48g; the env vars always win."""
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       15728640 kB\nMemFree:  1024 kB\n")
+    assert _local_driver_mem({}, str(meminfo)) == "7680m"
+    assert _local_driver_mem({"SPARK_GRAFT_DRIVER_MEM": "6g"},
+                             str(meminfo)) == "6g"
+    meminfo.write_text("MemTotal:     1056964608 kB\n")
+    assert _local_driver_mem({}, str(meminfo)) == "49152m"
+    meminfo.write_text("MemTotal:         524288 kB\n")
+    assert _local_driver_mem({}, str(meminfo)) == "1024m"
+    assert _local_driver_mem({}, str(tmp_path / "absent")) == "49152m"
+    assert _local_cpus({}) == str(os.cpu_count())
+    assert _local_cpus({"SPARK_GRAFT_CPUS": "7"}) == "7"
 
 
 def test_parse_bytes():
