@@ -32,6 +32,7 @@ the long-lived-session footgun VERDICT r3 #4 flagged.
 
 from __future__ import annotations
 
+import warnings
 from contextlib import contextmanager
 from contextvars import ContextVar
 
@@ -360,8 +361,6 @@ def dup_clusters(
             # the current labels are a checkpointed frame, so continuing
             # costs only the REMAINING rounds — at 100 TB, re-running the
             # whole job over a knob is the expensive wrong default.
-            import warnings
-
             budget = min(hard_cap, budget * 2)
             warnings.warn(
                 f"dup_clusters: no fixpoint after {rounds} rounds; "

@@ -16,9 +16,13 @@ Scale notes: the (day, bucket(conv_id)) partitions are the Iceberg
 from __future__ import annotations
 
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schemas import PARSED_SCHEMA
 
 # Sink name -> categories routed into it (FIXTURES.md §4 routed_counts).
 DEFAULT_SINKS: dict[str, list[str]] = {
@@ -41,6 +45,116 @@ def with_partition_cols(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     return df.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     )
+
+
+# XXH64 primes and Spark's hash seed; arithmetic is mod 2^64 like the
+# JVM's long
+_SEED = 42
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes) -> int:
+    """Spark's ``xxhash64`` of a string column, on the driver: XXH64 of
+    the UTF-8 bytes with Spark's seed 42 (``XXH64.hashUnsafeBytes``:
+    32-byte stripes, then 8-byte lanes, one 4-byte lane, single bytes),
+    returned as the signed long Spark yields."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_SEED + _P1 + _P2) & _M64, _SEED + _P2, _SEED,
+             (_SEED - _P1) & _M64]
+        while i <= n - 32:
+            v = [_xxh_round(acc, int.from_bytes(data[i + 8 * k:i + 8 * k + 8],
+                                                "little"))
+                 for k, acc in enumerate(v)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for acc in v:
+            h = ((h ^ _xxh_round(0, acc)) * _P1 + _P4) & _M64
+    else:
+        h = _SEED + _P5
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= data[i] * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+        i += 1
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def conv_bucket(conv_id: str) -> int:
+    """The ``bucket`` ``with_partition_cols`` writes for ``conv_id``
+    (``pmod(xxhash64(conv_id), N_BUCKETS)``), computed without a job."""
+    return xxhash64(conv_id.encode("utf-8")) % N_BUCKETS
+
+
+# Routed-table schema when no committed run holds data yet: the parsed
+# columns, then the partition columns as partition inference types them.
+_EMPTY_ROUTED_SCHEMA = T.StructType(
+    [f for f in PARSED_SCHEMA.fields if f.name != "category"]
+    + [
+        T.StructField("runid", T.StringType()),
+        T.StructField("category", T.StringType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+
+
+def bucket_files(
+    spark, root: str, run_id: str, day: str, bucket: int
+) -> list[str]:
+    """Data files of one run's (day, bucket) across categories: one
+    Hadoop ``globStatus``."""
+    from ..util import fs_glob
+
+    return fs_glob(
+        spark,
+        f"{root}/runid={run_id}/category=*/day={day}/bucket={bucket}/*.parquet",
+    )
+
+
+def routed_schema(
+    spark, root: str, runs: dict[int, list[tuple[str, str]]]
+) -> T.StructType | None:
+    """The routed table's schema, read from the footer of ONE data file of
+    ``runs`` (bucket -> (run_id, day) pairs) with ``basePath`` at the
+    routed root, so the partition columns type exactly as a read of the
+    whole root infers them. None when no listed run has a data file."""
+    for bucket, pairs in sorted(runs.items()):
+        for run_id, day in pairs:
+            files = bucket_files(spark, root, run_id, day, bucket)
+            if files:
+                return (
+                    spark.read.option("basePath", root).parquet(files[0])
+                    .schema
+                )
+    return None
 
 
 def routed_counts(parsed: DataFrame) -> DataFrame:
@@ -183,6 +297,18 @@ def read_sink(spark, sink_path: str) -> DataFrame:
     return spark.read.option("basePath", base).parquet(sink_path)
 
 
+def _read_paths(spark, root: str, schema: T.StructType | None,
+                paths: list[str]) -> DataFrame:
+    """Scan explicit routed-table paths with the snapshot's schema (no
+    inference job) and ``basePath`` at the routed root, so runid,
+    category, day and bucket resolve from the paths. No paths read as an
+    empty frame of that schema."""
+    reader = spark.read.schema(schema or _EMPTY_ROUTED_SCHEMA)
+    if not paths:
+        return reader.parquet()
+    return reader.option("basePath", root).parquet(*paths)
+
+
 def read_routed(
     spark, pipeline_base: str, incremental: bool = False, asof=None
 ) -> DataFrame:
@@ -205,24 +331,34 @@ def read_routed(
       committed before it, so compacted-but-not-yet-vacuumed partitions
       and forced reprocesses read exactly once.
 
-    Scale: the manifest holds one row per (day, bucket[, run]); the
-    authoritative triple set is collected (thousands of rows) into an isin
-    filter on partition columns, so file-index pruning drops
-    non-authoritative run dirs before any data IO.
+    Mechanism: the authoritative (run, day, bucket) triples come from the
+    cached driver-side manifest snapshot (``ManifestStore.snapshot``; no
+    fold job unless the manifest changed). Only the ``runid=`` dirs the
+    snapshot references are handed to the scan, with the snapshot's
+    schema, so orphan and unreferenced run dirs are never listed; the
+    triples become a filter on partition columns that prunes the other
+    (day, bucket) dirs of those runs before any data IO. A base with no
+    commit reads as an empty frame.
     """
     from ..plans.checkpoint import ManifestStore
+    from ..util import fs_glob
 
-    manifest = ManifestStore(f"{pipeline_base}/_manifest")
-    if incremental:
-        auth = manifest.visible_runs(spark, asof=asof)
-    else:
-        auth = manifest.current_state(spark, asof=asof).select(
-            "day", "bucket", "run_id"
-        )
+    root = f"{pipeline_base}/sinks/routed"
+    snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(
+        spark, root, asof=asof
+    )
+    runs = snap.runs(incremental)
     triples = [
-        f"{r['run_id']}\x1f{r['day']}\x1f{r['bucket']}" for r in auth.collect()
+        f"{run_id}\x1f{day}\x1f{bucket}"
+        for bucket, pairs in runs.items() for run_id, day in pairs
     ]
-    routed = spark.read.parquet(f"{pipeline_base}/sinks/routed")
+    referenced = {run_id for pairs in runs.values() for run_id, _ in pairs}
+    # seal latches are runs without a data dir: keep the dirs that exist
+    run_dirs = [
+        d for d in fs_glob(spark, f"{root}/runid=*")
+        if d.rstrip("/").rsplit("=", 1)[-1] in referenced
+    ]
+    routed = _read_paths(spark, root, snap.schema, run_dirs)
     key = F.concat_ws(
         "\x1f", F.col("runid"), F.col("day"), F.col("bucket").cast("string")
     )
@@ -235,37 +371,48 @@ def read_conversation(
     conv_id: str,
     incremental: bool = False,
 ) -> DataFrame:
-    """Point read of one conversation from the routed table — the layout's
-    fast path, exercising both pruning tiers the writer set up:
+    """Point read of one conversation from the routed table, touching only
+    the metadata and files it needs:
 
-    1. **Partition pruning**: bucket is a pure function of conv_id
-       (``pmod(xxhash64(conv_id), N_BUCKETS)``, with_partition_cols), so
-       recomputing it here turns the read into an equality filter on a
-       partition column — the file index drops every other bucket dir
-       before any data IO (1/N_BUCKETS of the files, per category/day).
-    2. **Row-group skipping**: on compacted partitions (compact_routed
-       clusters each file by (conv_id, turn_idx); ingest-time clustering
-       is available via write_sinks_single_pass sort_cols), the pushed
-       conv_id equality prunes on tight parquet min/max footer stats —
-       the scan decodes only the row groups holding this conversation.
-       Uncompacted chunk files still benefit from the pushed filter, just
-       with looser stats.
+    1. **Bucket on the driver**: bucket is a pure function of conv_id
+       (``pmod(xxhash64(conv_id), N_BUCKETS)``, with_partition_cols);
+       ``conv_bucket`` recomputes it with a Python port of Spark's hash.
+    2. **Snapshot, not fold**: the bucket's visible (run, day) pairs come
+       from the cached manifest snapshot (``ManifestStore.snapshot``).
+    3. **Exact files**: one ``globStatus`` per pair
+       (``runid=R/category=*/day=D/bucket=B/*.parquet``) yields the data
+       files, read with the snapshot's schema and ``basePath``. The files
+       are read in chunks of at most
+       ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths,
+       unioned: above it Spark lists the paths with a job of its own.
+    4. **Row-group skipping**: the bucket and conv_id equalities stay on
+       the plan; on compacted partitions (compact_routed clusters each
+       file by (conv_id, turn_idx); ingest-time clustering is available
+       via write_sinks_single_pass sort_cols) the pushed conv_id filter
+       prunes on tight parquet min/max footer stats.
 
-    At 100 TB this is the difference between a full-bucket scan and a
-    few-MB read; no index structure to maintain, just layout.
+    Neither orphan or superseded run dirs nor other buckets' files are
+    listed: the cost tracks the bucket's visible runs, not the table's
+    history. A base with no commit, or a bucket with no visible run,
+    reads as an empty frame.
     """
-    # recompute the writer's bucket transform on the executor-side hash
-    # (a 1-row local job; F.lit keeps arbitrary conv_id values safe)
-    bucket = (
-        spark.range(1)
-        .select(
-            F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(N_BUCKETS))
-            .cast("int")
-            .alias("b")
-        )
-        .first()["b"]
-    )
-    routed = read_routed(spark, pipeline_base, incremental=incremental)
+    from ..plans.checkpoint import ManifestStore
+
+    root = f"{pipeline_base}/sinks/routed"
+    snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(spark, root)
+    bucket = conv_bucket(conv_id)
+    files = [
+        f
+        for run_id, day in snap.runs(incremental).get(bucket, [])
+        for f in bucket_files(spark, root, run_id, day, bucket)
+    ]
+    limit = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    ))
+    routed = reduce(DataFrame.union, [
+        _read_paths(spark, root, snap.schema, files[i:i + limit])
+        for i in range(0, max(len(files), 1), limit)
+    ])
     return routed.filter(
         (F.col("bucket") == bucket) & (F.col("conv_id") == conv_id)
     ).orderBy("turn_idx")
@@ -382,13 +529,8 @@ def compact_routed(
 
     def files_in(runs: set[str], day: str, bucket) -> tuple[int, int]:
         files = [
-            p
-            for rid in runs
-            for p in fs_glob(
-                spark,
-                f"{root}/runid={rid}/category=*/day={day}/"
-                f"bucket={bucket}/*.parquet",
-            )
+            p for rid in runs
+            for p in bucket_files(spark, root, rid, day, bucket)
         ]
         return len(files), len({p.rsplit("/", 1)[0] for p in files})
 

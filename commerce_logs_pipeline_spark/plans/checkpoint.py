@@ -26,12 +26,15 @@ partition-parallel and the driver never touches row-level data.
 from __future__ import annotations
 
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.errors import AnalysisException
 
 from ..schemas import MANIFEST_SCHEMA
+from ..util import hadoop_fs
 
 KEY = ["day", "bucket"]
 
@@ -64,6 +67,26 @@ def new_run_id() -> str:
     BigInteger.pow). ~1 in 130 uuid-hex 12-char prefixes hits one of the
     two. The leading letter forces string inference."""
     return "r" + uuid.uuid4().hex[:11]
+
+
+@dataclass(frozen=True)
+class ManifestSnapshot:
+    """Driver-side view of one manifest version: per bucket, the
+    (run_id, day) pairs that incremental reads (``visible``, from
+    ``visible_runs``) and batch reads (``current``, the authoritative run
+    of ``current_state``) resolve, plus the routed table's schema (None
+    while no visible run holds data)."""
+
+    visible: dict[int, list[tuple[str, str]]]
+    current: dict[int, list[tuple[str, str]]]
+    schema: StructType | None
+
+    def runs(self, incremental: bool) -> dict[int, list[tuple[str, str]]]:
+        return self.visible if incremental else self.current
+
+
+# manifest path -> (version, snapshot); see ManifestStore.snapshot
+_SNAPSHOTS: dict[str, tuple[tuple, ManifestSnapshot]] = {}
 
 
 class ManifestStore:
@@ -173,6 +196,66 @@ class ManifestStore:
                 | ((~F.col("_sc")) & (F.col("_ts") > F.col("_ab")))
             )
             .select(*KEY, "run_id")
+        )
+
+    def _version(self, spark: SparkSession) -> tuple:
+        """(name, length, mtime) of every part file — one Hadoop
+        ``listStatus``. Appends only ever add part files, so any commit
+        changes it; empty when nothing was ever committed."""
+        fs, path = hadoop_fs(spark, self.path)
+        if not fs.exists(path):
+            return ()
+        return tuple(sorted(
+            (s.getPath().getName(), s.getLen(), s.getModificationTime())
+            for s in fs.listStatus(path)
+            if not s.getPath().getName().startswith(("_", "."))
+        ))
+
+    def snapshot(
+        self, spark: SparkSession, routed_path: str, asof=None
+    ) -> ManifestSnapshot:
+        """The manifest folded once per version into a driver-side
+        ``ManifestSnapshot`` — the reference processor's in-memory map,
+        rebuilt from the compacted topic only when it changed
+        (blob_state_processor.go:289-375). A cache hit costs one listing
+        of the manifest dir and no Spark job; a miss collects
+        ``visible_runs`` and ``current_state`` (manifest-sized) and reads
+        one footer of ``routed_path`` for the schema. The version is taken
+        BEFORE the fold, so a commit racing the fold can only make the
+        cached snapshot newer than its key, never staler. ``asof`` reads
+        bypass the cache."""
+        if asof is not None:
+            return self._fold_snapshot(spark, routed_path, asof)
+        key = (routed_path, self._version(spark))
+        hit = _SNAPSHOTS.get(self.path)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        snap = self._fold_snapshot(spark, routed_path)
+        _SNAPSHOTS[self.path] = (key, snap)
+        return snap
+
+    def _fold_snapshot(
+        self, spark: SparkSession, routed_path: str, asof=None
+    ) -> ManifestSnapshot:
+        from ..operators.router import routed_schema
+
+        def per_bucket(rows) -> dict[int, list[tuple[str, str]]]:
+            out: dict[int, list[tuple[str, str]]] = {}
+            # a partition holding only seal latches has no data run
+            for r in sorted(rows, key=lambda r: (r["run_id"] or "", r["day"])):
+                if r["run_id"] is not None:
+                    out.setdefault(r["bucket"], []).append(
+                        (r["run_id"], r["day"])
+                    )
+            return out
+
+        visible = per_bucket(self.visible_runs(spark, asof=asof).collect())
+        current = per_bucket(
+            self.current_state(spark, asof=asof)
+            .select(*KEY, "run_id").collect()
+        )
+        return ManifestSnapshot(
+            visible, current, routed_schema(spark, routed_path, visible)
         )
 
     def seal_partitions(

@@ -40,7 +40,9 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--json", action="store_true", help="JSON lines output")
     ap.add_argument("--asof", default=None,
                     help="time-travel: ISO timestamp; read the snapshot "
-                    "visible at that instant (Iceberg TIMESTAMP AS OF)")
+                    "visible at that instant (Iceberg TIMESTAMP AS OF). "
+                    "A trailing Z means UTC; a time with no offset is "
+                    "read as UTC")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     f = sub.add_parser("filter", help="arbitrary SQL expression filter (F6/F8)")
@@ -90,7 +92,11 @@ def run(args, spark) -> int:
     if getattr(args, "asof", None):
         from datetime import datetime, timezone
 
-        asof = datetime.fromisoformat(args.asof)
+        # fromisoformat rejects a trailing Z before Python 3.11
+        stamp = args.asof
+        if stamp.endswith("Z"):
+            stamp = stamp[:-1] + "+00:00"
+        asof = datetime.fromisoformat(stamp)
         if asof.tzinfo is None:
             # manifest updated_at values are instants (current_timestamp);
             # a NAIVE literal would be read in the driver session zone,

@@ -25,6 +25,9 @@ def test_explore_subcommands(spark, tmp_path, capsys):
         ["--base", base, "--json", "keys", "--prefix", "tool"],
         ["--base", base, "--json", "top", "--by", "category", "-n", "3"],
         ["--base", base, "--json", "stats"],
+        # a Z-suffixed UTC instant parses on every supported Python
+        ["--base", base, "--json", "--asof", "2999-01-01T00:00:00Z",
+         "stats"],
         ["--base", base, "--json", "profile", "--sample", "200"],
         ["--base", base, "--json", "pii"],
         ["--base", base, "--json", "pii", "--redact"],

@@ -5,7 +5,7 @@ region (extremes, nulls, ties, colons)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from commerce_logs_pipeline_spark.functions import selectors as S
@@ -323,3 +323,42 @@ def test_parse_is_total_and_conserving_property(spark, texts):
     known = {"http", "app", "container", "proxy", "tool_call", "user_turn",
              "assistant_turn", "error", "parse_error", "skipped"}
     assert all(r.category in known for r in got)     # total categorization
+
+
+# Strings for the driver-side bucket hash: NUL, CJK, non-BMP emoji and
+# ASCII, with byte lengths spanning the XXH64 tail (1-byte, 4-byte lane,
+# 8-byte lane) and 32-byte stripe branches. Surrogates cannot be UTF-8.
+_HASH_TEXT = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(["\x00", "a", "日", "😀", "é"]),
+        st.characters(blacklist_categories=("Cs",)),
+    ),
+    min_size=0, max_size=48,
+)
+
+
+@given(texts=st.lists(_HASH_TEXT, min_size=1, max_size=64))
+@example(texts=["", "\x00", "abc", "abcd", "abcdefg", "abcdefgh",
+                "x" * 31, "x" * 32, "x" * 33, "x" * 64, "日本語のテキスト",
+                "😀" * 8, "😀" * 9])
+@settings(**_SETTINGS)
+def test_driver_bucket_hash_matches_spark_property(spark, texts):
+    """The Python XXH64 port behind read_conversation's bucket equals
+    Spark's ``xxhash64`` and the writer's ``pmod(..., 16)`` bucket for
+    every string (one Spark job per example)."""
+    from commerce_logs_pipeline_spark.operators.router import (
+        N_BUCKETS,
+        conv_bucket,
+        xxhash64,
+    )
+
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    got = df.select(
+        "s",
+        F.xxhash64("s").alias("h"),
+        F.pmod(F.xxhash64("s"), F.lit(N_BUCKETS)).cast("int").alias("b"),
+    ).collect()
+    assert len(got) == len(texts)
+    for r in got:
+        assert xxhash64(r.s.encode("utf-8")) == r.h, r.s
+        assert conv_bucket(r.s) == r.b, r.s
