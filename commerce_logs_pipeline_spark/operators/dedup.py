@@ -32,6 +32,7 @@ the long-lived-session footgun VERDICT r3 #4 flagged.
 
 from __future__ import annotations
 
+import logging
 import warnings
 from contextlib import contextmanager
 from contextvars import ContextVar
@@ -39,6 +40,8 @@ from contextvars import ContextVar
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
+
+_log = logging.getLogger(__name__)
 
 # --- scoped cache registry -------------------------------------------------
 # ContextVar (not a module global) so concurrent driver threads / async
@@ -362,13 +365,13 @@ def dup_clusters(
             # costs only the REMAINING rounds — at 100 TB, re-running the
             # whole job over a knob is the expensive wrong default.
             budget = min(hard_cap, budget * 2)
-            warnings.warn(
-                f"dup_clusters: no fixpoint after {rounds} rounds; "
-                f"escalating round budget to {budget} "
-                f"(hard cap {hard_cap})",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+            # the warning reaches interactive callers; the log line
+            # reaches production driver logs, where warnings are not shown
+            msg = (f"dup_clusters: no fixpoint after {rounds} rounds; "
+                   f"escalating round budget to {budget} "
+                   f"(hard cap {hard_cap})")
+            _log.warning(msg)
+            warnings.warn(msg, RuntimeWarning, stacklevel=2)
     if not converged:
         raise RuntimeError(
             f"dup_clusters: min-label propagation did not reach the "

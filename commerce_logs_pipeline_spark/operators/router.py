@@ -38,12 +38,15 @@ DEFAULT_SINKS: dict[str, list[str]] = {
 # (service.go:232-235 semantics).
 
 N_BUCKETS = 16
+# files per (category, day, bucket) dir a routed write may produce: the
+# conv-hash salt of its pre-write distribution
+WRITE_SALTS = 4
 
 
-def with_partition_cols(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
+def with_partition_cols(df: DataFrame) -> DataFrame:
     """Add Iceberg-style partition transforms: days(ts) + bucket(conv_id)."""
     return df.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)).cast("int")
     )
 
 
@@ -186,9 +189,6 @@ def write_sinks_single_pass(
     parsed: DataFrame,
     base_path: str,
     run_id: str = "run0",
-    sinks: dict[str, list[str]] | None = None,
-    n_buckets: int = N_BUCKETS,
-    write_salts: int = 4,
     sort_cols: tuple[str, ...] | None = None,
 ) -> dict[str, str]:
     """ONE write job, partitioned by (category, day, bucket): every sink
@@ -212,7 +212,6 @@ def write_sinks_single_pass(
     service.go:232-235) so counts/manifest/aggregates all derive from the
     written output without re-parsing or caching the wide frame.
     """
-    sinks = sinks or DEFAULT_SINKS
     if not (run_id and run_id[0].isalpha()):
         # runid is a partition directory value; a number-like id trips
         # Spark partition-value type inference (all-digits -> LONG column
@@ -248,18 +247,18 @@ def write_sinks_single_pass(
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
     )
     (
-        with_partition_cols(parsed, n_buckets)
+        with_partition_cols(parsed)
         # hash-distribute on the partition keys before the write (the
         # Iceberg write.distribution-mode=hash analog): each task owns a
         # small set of (day, bucket, salt) units and writes at most
-        # write_salts files per partition dir instead of every task
+        # WRITE_SALTS files per partition dir instead of every task
         # spraying files into every dir. The conv-hash salt matters at
         # scale: with tasks >> distinct (day,bucket) groups, hash
         # collisions otherwise leave straggler tasks holding 2-3 whole
         # groups while other cores idle (measured as the pass-1 tail at
         # 4x8 executors).
         .withColumn(
-            "_wsalt", F.pmod(F.xxhash64("conv_id"), F.lit(write_salts))
+            "_wsalt", F.pmod(F.xxhash64("conv_id"), F.lit(WRITE_SALTS))
         )
         .repartition(n_tasks, F.col("day"), F.col("bucket"), F.col("_wsalt"))
         .drop("_wsalt")
@@ -284,7 +283,7 @@ def write_sinks_single_pass(
     # (read via read_sink(), which sets basePath for partition discovery)
     return {
         name: f"{run_path}/category={{{','.join(cats)}}}"
-        for name, cats in sinks.items()
+        for name, cats in DEFAULT_SINKS.items()
     }
 
 
@@ -333,35 +332,44 @@ def read_routed(
 
     Mechanism: the authoritative (run, day, bucket) triples come from the
     cached driver-side manifest snapshot (``ManifestStore.snapshot``; no
-    fold job unless the manifest changed). Only the ``runid=`` dirs the
-    snapshot references are handed to the scan, with the snapshot's
-    schema, so orphan and unreferenced run dirs are never listed; the
-    triples become a filter on partition columns that prunes the other
-    (day, bucket) dirs of those runs before any data IO. A base with no
-    commit reads as an empty frame.
+    fold job unless the manifest changed) and are scanned by
+    ``_scan_runs``, the one committed-run scan that resume and compaction
+    share: only the ``runid=`` dirs the snapshot references are handed to
+    the scan, with the snapshot's schema, so orphan and unreferenced run
+    dirs are never listed. A base with no commit reads as an empty frame.
     """
     from ..plans.checkpoint import ManifestStore
-    from ..util import fs_glob
 
     root = f"{pipeline_base}/sinks/routed"
     snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(
         spark, root, asof=asof
     )
-    runs = snap.runs(incremental)
+    return _scan_runs(spark, root, snap, snap.runs(incremental))
+
+
+def _scan_runs(spark, root: str, snap, runs: dict[int, list[tuple[str, str]]]
+               ) -> DataFrame:
+    """Rows of the (run_id, day) pairs per bucket in ``runs``, resolved
+    from the manifest snapshot ``snap``. Only the referenced ``runid=``
+    dirs that exist are scanned (seal latches are runs without a data
+    dir), with the snapshot's schema; the (run, day, bucket) triples
+    become a filter on partition columns that prunes those runs' other
+    (day, bucket) dirs before any data IO. No pairs read as an empty
+    frame."""
+    from ..util import fs_glob
+
     triples = [
         f"{run_id}\x1f{day}\x1f{bucket}"
         for bucket, pairs in runs.items() for run_id, day in pairs
     ]
     referenced = {run_id for pairs in runs.values() for run_id, _ in pairs}
-    # seal latches are runs without a data dir: keep the dirs that exist
     run_dirs = [
         d for d in fs_glob(spark, f"{root}/runid=*")
         if d.rstrip("/").rsplit("=", 1)[-1] in referenced
     ]
     routed = _read_paths(spark, root, snap.schema, run_dirs)
-    key = F.concat_ws(
-        "\x1f", F.col("runid"), F.col("day"), F.col("bucket").cast("string")
-    )
+    key = F.concat_ws("\x1f", F.col("runid"), F.col("day"),
+                      F.col("bucket").cast("string"))
     return routed.filter(key.isin(triples))
 
 
@@ -474,9 +482,15 @@ def compact_routed(
     reads are correct for chunk-committed partitions too, not just
     whole-partition runs. Open partitions are skipped (tails still grow).
 
-    Selection: a closed partition compacts when its committed rows span
-    >1 run dir, or any of its partition dirs holds >1 file. Already-minimal
-    partitions are untouched (idempotent).
+    Selection: one manifest snapshot (``ManifestStore.snapshot``) gives
+    the closed partitions and each one's visible runs; a closed partition
+    compacts when its visible runs number >1, or any of its partition
+    dirs holds >1 file. A compacted partition is not rewritten again (its
+    compact run supersedes the others). A seal latch counts as a visible
+    run, so a partition committed by one chunk and then sealed is
+    rewritten once into a compact run even when it already holds one file
+    per dir. The sources are read through ``_scan_runs``, the scan
+    ``read_routed`` uses, so orphan run dirs are never listed.
 
     Commit safety is inherited from the write protocol: a crash before the
     manifest append leaves an orphan run dir that ``vacuum_uncommitted``
@@ -509,12 +523,8 @@ def compact_routed(
     # visible — visible_runs orders supersession by this read-asof, not
     # by the compact commit's wall clock.
     read_asof = datetime.now(timezone.utc)
-    state = manifest.current_state(spark)
-    closed = {
-        (r["day"], r["bucket"])
-        for r in state.filter(F.col("status") == "closed").collect()
-    }
     root = f"{pipeline_base}/sinks/routed"
+    snap = manifest.snapshot(spark, root)
     # The COMPLETE row set of a closed partition is the manifest's VISIBLE
     # run set (checkpoint.ManifestStore.visible_runs): the latest
     # self-contained run — a "compact" snapshot OR a "full" forced
@@ -523,41 +533,29 @@ def compact_routed(
     # would permanently duplicate every row of partitions carrying
     # overlapping whole-partition runs (forced reprocess over earlier
     # commits, or re-compaction before vacuum_superseded ran).
-    visible: dict[tuple, set[str]] = {}
-    for r in manifest.visible_runs(spark).collect():
-        visible.setdefault((r["day"], r["bucket"]), set()).add(r["run_id"])
-
-    def files_in(runs: set[str], day: str, bucket) -> tuple[int, int]:
-        files = [
-            p for rid in runs
-            for p in bucket_files(spark, root, rid, day, bucket)
-        ]
-        return len(files), len({p.rsplit("/", 1)[0] for p in files})
-
-    todo: dict[tuple, set[str]] = {}
-    files_before = 0
-    for day, bucket in closed:
-        source_runs = visible.get((day, bucket), set())
-        n_files, n_dirs = files_in(source_runs, day, bucket)
-        if len(source_runs) > 1 or n_files > n_dirs:
-            todo[(day, bucket)] = source_runs
-            files_before += n_files
-    if not todo:
+    found: dict[tuple[str, int], tuple[list[str], list[str]]] = {}
+    for bucket, pairs in snap.visible.items():
+        for rid, day in pairs:
+            if (day, bucket) in snap.closed:
+                rids, files = found.setdefault((day, bucket), ([], []))
+                rids.append(rid)
+                files.extend(bucket_files(spark, root, rid, day, bucket))
+    parts = {
+        k for k, (rids, files) in found.items()
+        if len(rids) > 1
+        or len(files) > len({p.rsplit("/", 1)[0] for p in files})
+    }
+    if not parts:
         return {"run_id": None, "partitions": 0, "files_before": 0,
                 "files_after": 0}
+    todo = {
+        bucket: [(r, d) for r, d in pairs if (d, bucket) in parts]
+        for bucket, pairs in snap.visible.items()
+    }
 
     run_id = run_id or f"compact{new_run_id()[:8]}"
-    triples = [
-        f"{rid}\x1f{d}\x1f{b}"
-        for (d, b), runs in todo.items()
-        for rid in runs
-    ]
-    routed = spark.read.parquet(f"{root}")
-    rkey = F.concat_ws(
-        "\x1f", F.col("runid"), F.col("day"), F.col("bucket").cast("string")
-    )
     (
-        routed.filter(rkey.isin(triples))
+        _scan_runs(spark, root, snap, todo)
         # runid is a PATH-derived partition column of the source read;
         # carrying it into the new files would bake a stale data column
         # that shadows under the new runid= dir
@@ -580,7 +578,7 @@ def compact_routed(
     )
     events = spark.createDataFrame(
         [(d, b, "closed", None, 0, 0, 0, 0, None, None, run_id, read_asof)
-         for d, b in todo],
+         for d, b in sorted(parts)],
         "day string, bucket int, status string, max_turn_watermark long, "
         "rows_processed long, rows_routed long, rows_skipped long, "
         "rows_error long, first_processed_ts timestamp, "
@@ -594,8 +592,9 @@ def compact_routed(
             f"{root}/runid={run_id}/category=*/day=*/bucket=*/*.parquet",
         )
     )
-    return {"run_id": run_id, "partitions": len(todo),
-            "files_before": files_before, "files_after": files_after}
+    return {"run_id": run_id, "partitions": len(parts),
+            "files_before": sum(len(found[k][1]) for k in parts),
+            "files_after": files_after}
 
 
 def vacuum_superseded(spark, pipeline_base: str, compacted_run_id: str
@@ -626,18 +625,15 @@ def vacuum_superseded(spark, pipeline_base: str, compacted_run_id: str
             "destroy live chunk data"
         )
 
-    manifest = ManifestStore(f"{pipeline_base}/_manifest")
+    root = f"{pipeline_base}/sinks/routed"
+    snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(spark, root)
     owned = {
-        (r["day"], r["bucket"])
-        for r in manifest.current_state(spark)
-        .filter(
-            (F.col("status") == "closed")
-            & (F.col("run_id") == compacted_run_id)
-        )
-        .collect()
+        (day, bucket)
+        for bucket, pairs in snap.current.items()
+        for rid, day in pairs
+        if rid == compacted_run_id and (day, bucket) in snap.closed
     }
     removed = []
-    root = f"{pipeline_base}/sinks/routed"
     for d in fs_glob(spark, f"{root}/runid=*/category=*/day=*/bucket=*"):
         parts = d.rstrip("/").split("/")
         rid = parts[-4].split("=", 1)[1]

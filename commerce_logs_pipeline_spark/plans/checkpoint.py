@@ -71,14 +71,17 @@ def new_run_id() -> str:
 
 @dataclass(frozen=True)
 class ManifestSnapshot:
-    """Driver-side view of one manifest version: per bucket, the
-    (run_id, day) pairs that incremental reads (``visible``, from
-    ``visible_runs``) and batch reads (``current``, the authoritative run
-    of ``current_state``) resolve, plus the routed table's schema (None
+    """Driver-side view of one manifest version — the one resolver of
+    what is committed. Per bucket, the (run_id, day) pairs that
+    incremental reads (``visible``, from ``visible_runs``) and batch reads
+    (``current``, the authoritative run of ``current_state``) resolve;
+    the (day, bucket) partitions whose status latch is ``closed``
+    (seal-only partitions included); and the routed table's schema (None
     while no visible run holds data)."""
 
     visible: dict[int, list[tuple[str, str]]]
     current: dict[int, list[tuple[str, str]]]
+    closed: frozenset[tuple[str, int]]
     schema: StructType | None
 
     def runs(self, incremental: bool) -> dict[int, list[tuple[str, str]]]:
@@ -223,10 +226,14 @@ class ManifestStore:
         one footer of ``routed_path`` for the schema. The version is taken
         BEFORE the fold, so a commit racing the fold can only make the
         cached snapshot newer than its key, never staler. ``asof`` reads
-        bypass the cache."""
+        bypass the cache. A manifest with no commit is the empty snapshot,
+        without a read."""
+        version = self._version(spark)
+        if not version:
+            return ManifestSnapshot({}, {}, frozenset(), None)
         if asof is not None:
             return self._fold_snapshot(spark, routed_path, asof)
-        key = (routed_path, self._version(spark))
+        key = (routed_path, version)
         hit = _SNAPSHOTS.get(self.path)
         if hit is not None and hit[0] == key:
             return hit[1]
@@ -250,12 +257,15 @@ class ManifestStore:
             return out
 
         visible = per_bucket(self.visible_runs(spark, asof=asof).collect())
-        current = per_bucket(
-            self.current_state(spark, asof=asof)
-            .select(*KEY, "run_id").collect()
+        state = self.current_state(spark, asof=asof).select(
+            *KEY, "run_id", "status"
+        ).collect()
+        closed = frozenset(
+            (r["day"], r["bucket"]) for r in state if r["status"] == "closed"
         )
         return ManifestSnapshot(
-            visible, current, routed_schema(spark, routed_path, visible)
+            visible, per_bucket(state), closed,
+            routed_schema(spark, routed_path, visible),
         )
 
     def seal_partitions(
@@ -297,89 +307,57 @@ class ManifestStore:
         self.append(events)
         return todo
 
-    def closed_partitions(self, spark: SparkSession) -> DataFrame:
-        return self.current_state(spark).filter(F.col("status") == "closed").select(*KEY)
-
     def pending(
         self,
         spark: SparkSession,
         partitioned_input: DataFrame,
-        turn_col: str = "turn_idx",
-        routed_path: str | None = None,
-        stream_col: str = "conv_id",
+        routed_path: str,
     ) -> DataFrame:
         """Rows still needing ingestion — TWO granularities, mirroring the
         reference's resume ladder (worker.go:346-351 partition skip +
-        processor.go:86-116 mid-blob offset resume):
+        processor.go:86-116 mid-blob offset resume), both resolved from
+        the cached manifest snapshot (``snapshot``):
 
-        - CLOSED (day, bucket) partitions drop entirely (anti-join);
+        - CLOSED (day, bucket) partitions drop entirely (broadcast
+          anti-join against the snapshot's closed set);
         - OPEN partitions resume MID-PARTITION at PER-CONVERSATION
-          granularity when ``routed_path`` is given: the committed output
-          of the open partitions is scanned (two slim columns, partition-
-          pruned to the open tail) for each conversation's max ingested
-          ``turn_col``, and only rows beyond their own conversation's
-          watermark flow. This is the exact analog of the reference's
-          per-blob ``lastIngestedOffset`` (one offset per stream, not per
-          partition): conversations that advance unevenly within one
-          (day, bucket) partition never lose rows to a partition-wide max.
-        - with ``routed_path=None`` the coarser partition-level watermark
-          applies (``turn_col > max_turn_watermark``) — safe only under a
-          uniform-tail contract where every committed chunk carries all
-          conversations of the partition to the same turn depth;
+          granularity: the snapshot's visible runs of the open partitions
+          — and only those — are scanned through the routed read's
+          path-scoped scan (``router._scan_runs``) for each conversation's
+          max ingested ``turn_idx``, and only rows beyond their own
+          conversation's watermark flow. This is the exact analog of the
+          reference's per-blob ``lastIngestedOffset`` (one offset per
+          stream, not per partition): conversations that advance unevenly
+          within one (day, bucket) partition never lose rows to a
+          partition-wide max. Orphan run dirs are never listed;
         - unseen partitions / unseen conversations flow whole.
 
-        Scale: the manifest sides are tiny (one row per partition) ->
-        broadcast; the per-conversation watermark frame is one row per
+        Scale: the closed set is manifest-sized (one row per partition)
+        -> broadcast; the per-conversation watermark frame is one row per
         conversation in the OPEN partitions only (the recent tail, a sliver
         of the table) and joins distributed — never collected.
         """
-        state = self.current_state(spark)
-        closed = state.filter(F.col("status") == "closed").select(*KEY)
-        out = partitioned_input.join(F.broadcast(closed), on=KEY, how="left_anti")
+        from ..operators.router import _scan_runs
 
-        open_rows = state.filter(F.col("status") == "open").select(*KEY).collect()
-        if not open_rows:
-            return out
-        if routed_path is None:
-            open_wm = (
-                state.filter(
-                    (F.col("status") == "open")
-                    & F.col("max_turn_watermark").isNotNull()
-                )
-                .select(*KEY, F.col("max_turn_watermark").alias("_wm"))
-            )
-            return (
-                out.join(F.broadcast(open_wm), on=KEY, how="left")
-                .filter(F.col("_wm").isNull() | (F.col(turn_col) > F.col("_wm")))
-                .drop("_wm")
-            )
-
-        # per-conversation watermarks from the committed snapshot dirs of
-        # the open partitions (manifest-sized driver data selects the dirs;
-        # the scan itself reads only (stream, turn) + partition columns)
-        open_set = {(r["day"], r["bucket"]) for r in open_rows}
-        triples = [
-            f"{r['run_id']}\x1f{r['day']}\x1f{r['bucket']}"
-            for r in self.visible_runs(spark).collect()
-            if (r["day"], r["bucket"]) in open_set
-        ]
-        if not triples:
-            return out
-        try:
-            routed = spark.read.parquet(routed_path)
-        except AnalysisException:
-            return out  # nothing ever written: everything is pending
-        rkey = F.concat_ws(
-            "\x1f", F.col("runid"), F.col("day"), F.col("bucket").cast("string")
+        snap = self.snapshot(spark, routed_path)
+        closed = spark.createDataFrame(
+            sorted(snap.closed), "day string, bucket int"
         )
+        out = partitioned_input.join(F.broadcast(closed), on=KEY, how="left_anti")
+        open_runs = {
+            bucket: [(r, d) for r, d in pairs if (d, bucket) not in snap.closed]
+            for bucket, pairs in snap.visible.items()
+        }
+        if not any(open_runs.values()):
+            return out
         conv_wm = (
-            routed.filter(rkey.isin(triples))
-            .groupBy(*KEY, stream_col)
-            .agg(F.max(turn_col).alias("_cwm"))
+            _scan_runs(spark, routed_path, snap, open_runs)
+            .groupBy(*KEY, "conv_id")
+            .agg(F.max("turn_idx").alias("_cwm"))
         )
         return (
-            out.join(conv_wm, on=KEY + [stream_col], how="left")
-            .filter(F.col("_cwm").isNull() | (F.col(turn_col) > F.col("_cwm")))
+            out.join(conv_wm, on=KEY + ["conv_id"], how="left")
+            .filter(F.col("_cwm").isNull() | (F.col("turn_idx") > F.col("_cwm")))
             .drop("_cwm")
         )
 

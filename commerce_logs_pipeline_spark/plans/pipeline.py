@@ -213,7 +213,6 @@ def run_pipeline(
     run_id: str | None = None,
     resume: bool = True,
     write_aggregates: bool = True,
-    use_pandas_grok: bool = True,
     close_partitions: bool = True,
 ) -> PipelineReport:
     """Run the full pipeline over ``transcripts``; outputs under ``base_path``.
@@ -260,9 +259,7 @@ def run_pipeline(
         if not todo.select("day", "bucket").distinct().collect():
             return _noop_report(run_id, t0)
 
-    enriched = enrich_with_default_dims(
-        parse_transcripts(todo, use_pandas_grok=use_pandas_grok)
-    )
+    enriched = enrich_with_default_dims(parse_transcripts(todo))
     # close_partitions=False records OPEN events with the chunk's turn
     # watermark: the next resume continues MID-PARTITION from turn > w
     # (the growing-blob tail model, processor.go:86-116); the final chunk

@@ -8,12 +8,15 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from commerce_logs_pipeline_spark.functions.parse import parse_transcripts
 from commerce_logs_pipeline_spark.operators.router import (
     compact_routed,
     read_routed,
     vacuum_superseded,
     vacuum_uncommitted,
+    write_sinks_single_pass,
 )
+from commerce_logs_pipeline_spark.plans.enrich import enrich_with_default_dims
 from commerce_logs_pipeline_spark.plans.pipeline import run_pipeline
 from commerce_logs_pipeline_spark.synth import generate_transcripts
 
@@ -45,6 +48,12 @@ def test_compact_and_vacuum_roundtrip(spark, tmp_path):
     n_before = len(before_rows)
     assert n_before == 4_000
     files_before = _routed_files(base)
+    # an uncommitted run dir (a crash before its manifest append) holding
+    # every row again: compaction must neither read nor resurrect it
+    write_sinks_single_pass(
+        enrich_with_default_dims(parse_transcripts(full)),
+        f"{base}/sinks", run_id="orphan0",
+    )
 
     rep = compact_routed(spark, base, run_id="compactA")
     assert rep["partitions"] > 0
@@ -57,11 +66,15 @@ def test_compact_and_vacuum_roundtrip(spark, tmp_path):
     )
 
     # BATCH read now resolves chunk-committed partitions correctly (the
-    # compacted run is a complete snapshot) and matches pre-compaction rows
-    batch_rows = sorted(
-        map(tuple, read_routed(spark, base).select(KEY_COLS).collect())
-    )
-    assert batch_rows == before_rows
+    # compacted run is a complete snapshot) and matches pre-compaction
+    # rows; neither read mode picks up the orphan's copies
+    for incremental in (False, True):
+        rows = sorted(
+            map(tuple, read_routed(spark, base, incremental=incremental)
+                .select(KEY_COLS).collect())
+        )
+        assert rows == before_rows
+        assert len({r[:2] for r in rows}) == n_before
 
     # superseded chunk subtrees reclaimed; both read modes identical
     removed = vacuum_superseded(spark, base, "compactA")
@@ -339,6 +352,8 @@ def test_seal_partitions_latch_and_run_resolution(spark, tmp_path):
     run_pipeline(spark, full, base, run_id="chunkA", close_partitions=False)
 
     ms = ManifestStore(f"{base}/_manifest")
+    root = f"{base}/sinks/routed"
+    assert ms.snapshot(spark, root).closed == frozenset()
     state0 = ms.current_state(spark)
     assert state0.filter(F.col("status") == "open").count() > 0
     days = sorted(r["day"] for r in state0.select("day").distinct().collect())
@@ -351,6 +366,8 @@ def test_seal_partitions_latch_and_run_resolution(spark, tmp_path):
     assert st.filter(
         (F.col("day") >= days[1]) & (F.col("status") == "closed")
     ).count() == 0
+    # the snapshot reports the seal-only partitions as closed, and only them
+    assert ms.snapshot(spark, root).closed == frozenset(sealed1)
 
     # full seal closes the rest; authoritative run_id stays the DATA run
     sealed2 = ms.seal_partitions(spark)
@@ -358,6 +375,10 @@ def test_seal_partitions_latch_and_run_resolution(spark, tmp_path):
     st = ms.current_state(spark)
     assert st.filter(F.col("status") == "open").count() == 0
     assert {r["run_id"] for r in st.select("run_id").collect()} == {"chunkA"}
+    snap = ms.snapshot(spark, root)
+    assert snap.closed == frozenset(sealed1) | frozenset(sealed2)
+    assert {rid for pairs in snap.current.values()
+            for rid, _ in pairs} == {"chunkA"}
 
     # idempotent: nothing left to seal
     assert ms.seal_partitions(spark) == []

@@ -1,8 +1,9 @@
 """Metadata-first reads: ``read_conversation`` / ``read_routed`` resolve
 runs from the cached manifest snapshot and scan only the files of
 visible runs. Pins that the cache is never stale across commits and
-maintenance, that orphan run dirs never reach the scan, and that reads
-of a base with nothing committed return empty frames."""
+maintenance, that orphan run dirs never reach the scan (of the reads and
+of resume), and that reads of a base with nothing committed return
+empty frames."""
 
 from __future__ import annotations
 
@@ -20,7 +21,7 @@ from commerce_logs_pipeline_spark.operators.router import (
 )
 from commerce_logs_pipeline_spark.plans.checkpoint import ManifestStore
 from commerce_logs_pipeline_spark.plans.enrich import enrich_with_default_dims
-from commerce_logs_pipeline_spark.plans.pipeline import commit_run
+from commerce_logs_pipeline_spark.plans.pipeline import commit_run, run_pipeline
 from commerce_logs_pipeline_spark.synth import generate_transcripts
 
 ROW_COLS = ["conv_id", "turn_idx", "role", "text", "category", "day",
@@ -122,3 +123,27 @@ def test_point_read_scans_only_visible_bucket_files(spark, tmp_path):
     assert _rows(out) == expected
     assert not any("runid=orphan0" in p
                    for p in read_routed(spark, base).inputFiles())
+
+
+def test_resume_never_lists_orphan_runs(spark, tmp_path):
+    """Resume resolves the open partitions' visible runs from the manifest
+    snapshot and scans only their run dirs: an uncommitted run dir holding
+    every row never reaches the resume scan, and the pending rows are
+    exactly the uncommitted tail."""
+    base = str(tmp_path / "out")
+    full = generate_transcripts(spark, 2_000, partitions=4).cache()
+    head = full.filter(F.col("turn_idx") <= 2)
+    run_pipeline(spark, head, base, run_id="chunk0", close_partitions=False)
+    write_sinks_single_pass(
+        enrich_with_default_dims(parse_transcripts(full)),
+        f"{base}/sinks", run_id="orphan0",
+    )
+    todo = ManifestStore(f"{base}/_manifest").pending(
+        spark, with_partition_cols(full),
+        routed_path=f"{base}/sinks/routed",
+    )
+    files = todo.inputFiles()
+    assert any("/runid=chunk0/" in p for p in files)
+    assert not any("runid=orphan0" in p for p in files)
+    assert todo.count() == full.count() - head.count()
+    full.unpersist()

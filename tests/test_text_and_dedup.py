@@ -242,23 +242,33 @@ def test_dup_clusters_long_chain_converges(spark):
     assert len(got) == n + 1
 
 
-def test_dup_clusters_auto_escalates_past_small_budget(spark):
+def test_dup_clusters_auto_escalates_past_small_budget(spark, caplog):
     """VERDICT r5 #5: exhausting max_iterations must not discard the
     completed (checkpointed) rounds — the round budget doubles with a
     RuntimeWarning up to a 4x hard cap and the run converges without a
     manual retry. A 64-vertex path with jumps_per_round=1 needs ~7
-    rounds; max_iterations=2 forces two escalations (2 -> 4 -> 8)."""
+    rounds; max_iterations=2 forces two escalations (2 -> 4 -> 8). Each
+    escalation is also a WARNING record of the module's logger, so it
+    reaches driver logs."""
+    import logging
+
     n = 63
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    with dedup.released_after():
+    with dedup.released_after(), caplog.at_level(
+        logging.WARNING, logger=dedup.__name__
+    ):
         with pytest.warns(RuntimeWarning, match="escalating round budget"):
             got = dedup.dup_clusters(
                 pairs, max_iterations=2, jumps_per_round=1
             ).collect()
     assert {r.cluster_id for r in got} == {0}
     assert len(got) == n + 1
+    logged = [r.getMessage() for r in caplog.records
+              if r.name == dedup.__name__ and r.levelno == logging.WARNING]
+    assert [m.split("escalating round budget to ")[1].split()[0]
+            for m in logged] == ["4", "8"]
 
 
 def test_dup_clusters_still_raises_past_hard_cap(spark):
