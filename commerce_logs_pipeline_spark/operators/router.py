@@ -202,7 +202,7 @@ def write_sinks_single_pass(
     commit point. Dynamic partition overwrite is deliberately NOT used —
     its job commit renames every partition dir serially on the driver
     (~45 ms/dir; measured 45 s for 960 dirs), a hard scaling ceiling.
-    Readers resolve the authoritative run per (day, bucket) from the
+    Readers resolve the visible runs per (day, bucket) from the
     manifest (``read_routed``), so uncommitted/crashed run dirs are simply
     never visible — replays converge without overwrites.
 
@@ -308,29 +308,26 @@ def _read_paths(spark, root: str, schema: T.StructType | None,
     return reader.option("basePath", root).parquet(*paths)
 
 
-def read_routed(
-    spark, pipeline_base: str, incremental: bool = False, asof=None
-) -> DataFrame:
+def read_routed(spark, pipeline_base: str, asof=None) -> DataFrame:
     """Authoritative snapshot read of the routed table — the reader-side
     half of the Iceberg-style commit protocol. Uncommitted run dirs
     (crashed before their manifest append) are never visible.
 
-    - incremental=False (batch ownership): per (day, bucket), the LATEST
-      committed run's rows win — correct when runs own whole partitions
-      (the resume anti-join guarantees disjointness; a forced reprocess
-      supersedes the old snapshot).
-    - asof (datetime): TIME TRAVEL — resolve the snapshot a reader saw
-      at that instant (the Iceberg TIMESTAMP AS OF analog; an append-only
-      manifest makes this a filter on commit time). History reaches back
-      as far as vacuum has not yet reclaimed superseded run dirs.
-    - incremental=True (streaming appends): rows of every VISIBLE
-      committed run — chunk runs append disjoint row sets (batch_id-keyed
-      run dirs make replays overwrite themselves, so no duplicates), and a
-      self-contained run (``compact``/``full`` prefix) supersedes all runs
-      committed before it, so compacted-but-not-yet-vacuumed partitions
-      and forced reprocesses read exactly once.
+    The rows are those of every VISIBLE committed run
+    (``ManifestStore.visible_runs``): chunk runs append disjoint row sets
+    (batch_id-keyed run dirs make replays overwrite themselves, so no
+    duplicates), and a self-contained run (``compact``/``full`` prefix)
+    supersedes all runs committed before it, so compacted-but-not-yet-
+    vacuumed partitions and forced reprocesses read exactly once. The
+    result depends only on what was committed, not on whether it arrived
+    as one run, resume chunks or stream micro-batches.
 
-    Mechanism: the authoritative (run, day, bucket) triples come from the
+    ``asof`` (datetime): TIME TRAVEL — resolve the snapshot a reader saw
+    at that instant (the Iceberg TIMESTAMP AS OF analog; an append-only
+    manifest makes this a filter on commit time). History reaches back as
+    far as vacuum has not yet reclaimed superseded run dirs.
+
+    Mechanism: the visible (run, day, bucket) triples come from the
     cached driver-side manifest snapshot (``ManifestStore.snapshot``; no
     fold job unless the manifest changed) and are scanned by
     ``_scan_runs``, the one committed-run scan that resume and compaction
@@ -344,7 +341,7 @@ def read_routed(
     snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(
         spark, root, asof=asof
     )
-    return _scan_runs(spark, root, snap, snap.runs(incremental))
+    return _scan_runs(spark, root, snap, snap.visible)
 
 
 def _scan_runs(spark, root: str, snap, runs: dict[int, list[tuple[str, str]]]
@@ -377,10 +374,11 @@ def read_conversation(
     spark,
     pipeline_base: str,
     conv_id: str,
-    incremental: bool = False,
+    incremental: bool = True,
 ) -> DataFrame:
     """Point read of one conversation from the routed table, touching only
-    the metadata and files it needs:
+    the metadata and files it needs (``incremental`` is accepted only as
+    True, the one visibility rule, for callers that still pass it):
 
     1. **Bucket on the driver**: bucket is a pure function of conv_id
        (``pmod(xxhash64(conv_id), N_BUCKETS)``, with_partition_cols);
@@ -406,12 +404,17 @@ def read_conversation(
     """
     from ..plans.checkpoint import ManifestStore
 
+    if incremental is not True:
+        raise ValueError(
+            f"read_conversation resolves the visible runs only "
+            f"(incremental=True); got incremental={incremental!r}"
+        )
     root = f"{pipeline_base}/sinks/routed"
     snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(spark, root)
     bucket = conv_bucket(conv_id)
     files = [
         f
-        for run_id, day in snap.runs(incremental).get(bucket, [])
+        for run_id, day in snap.visible.get(bucket, [])
         for f in bucket_files(spark, root, run_id, day, bucket)
     ]
     limit = int(spark.conf.get(
@@ -471,34 +474,29 @@ def compact_routed(
     Iceberg ``rewrite_data_files`` analog (SURVEY §4 X9) on the
     snapshot-dir protocol. Incremental ingestion legitimately fragments a
     partition: every committed chunk is its own ``runid=`` dir, so a
-    (day, bucket) closed after N chunk commits carries N small file sets
-    (and is only readable via the incremental union). This op rewrites
-    each such CLOSED partition's full committed row set (union across its
-    chunk runs) into a fresh run dir with ONE file per
+    (day, bucket) closed after N chunk commits carries N small file sets.
+    This op rewrites each such CLOSED partition's visible row set (the
+    union of its visible runs) into a fresh run dir with ONE file per
     (category, day, bucket) dir, then commits via a zero-count manifest
     event: fold sums stay exact, the null watermark keeps the monotonic
-    max, the closed latch stays closed, and latest-wins run metadata flips
-    authoritative BATCH reads to the compacted copy — after which batch
-    reads are correct for chunk-committed partitions too, not just
-    whole-partition runs. Open partitions are skipped (tails still grow).
+    max, the closed latch stays closed, and the self-contained compact
+    run supersedes the runs it read (``visible_runs``), so reads resolve
+    the compacted copy. Open partitions are skipped (tails still grow).
 
     Selection: one manifest snapshot (``ManifestStore.snapshot``) gives
-    the closed partitions and each one's visible runs; a closed partition
-    compacts when its visible runs number >1, or any of its partition
-    dirs holds >1 file. A compacted partition is not rewritten again (its
-    compact run supersedes the others). A seal latch counts as a visible
-    run, so a partition committed by one chunk and then sealed is
-    rewritten once into a compact run even when it already holds one file
-    per dir. The sources are read through ``_scan_runs``, the scan
-    ``read_routed`` uses, so orphan run dirs are never listed.
+    the closed partitions and each one's visible data runs (seal latches
+    are not data runs); a closed partition compacts when its visible runs
+    number >1, or any of its partition dirs holds >1 file. Partitions
+    that already hold one run with one file per dir — a compacted
+    partition, or one chunk then sealed — are left alone. The sources are
+    read through ``_scan_runs``, the scan ``read_routed`` uses, so orphan
+    run dirs are never listed.
 
     Commit safety is inherited from the write protocol: a crash before the
     manifest append leaves an orphan run dir that ``vacuum_uncommitted``
-    removes; readers never see it. The superseded chunk dirs stay on disk
-    (incremental readers of OTHER partitions are unaffected; incremental
-    reads of compacted partitions would double-count) — reclaim them with
-    ``vacuum_superseded(spark, base, run_id)``, after which batch and
-    incremental reads agree.
+    removes; readers never see it. The superseded chunk dirs stay on disk,
+    invisible to reads — reclaim them with
+    ``vacuum_superseded(spark, base, run_id)``.
 
     Scale: one shuffle of the compacted partitions' rows, hash-distributed
     on the partition key so each (category, day, bucket) group lands in
@@ -525,14 +523,10 @@ def compact_routed(
     read_asof = datetime.now(timezone.utc)
     root = f"{pipeline_base}/sinks/routed"
     snap = manifest.snapshot(spark, root)
-    # The COMPLETE row set of a closed partition is the manifest's VISIBLE
-    # run set (checkpoint.ManifestStore.visible_runs): the latest
-    # self-contained run — a "compact" snapshot OR a "full" forced
-    # reprocess — plus chunk runs committed after it; all chunk runs when
-    # no self-contained run exists. Unioning ALL committed runs instead
-    # would permanently duplicate every row of partitions carrying
-    # overlapping whole-partition runs (forced reprocess over earlier
-    # commits, or re-compaction before vacuum_superseded ran).
+    # A closed partition's complete row set is its visible runs
+    # (ManifestStore.visible_runs); unioning every committed run would
+    # duplicate the rows of partitions carrying overlapping self-contained
+    # runs (a forced reprocess, or re-compaction before a vacuum).
     found: dict[tuple[str, int], tuple[list[str], list[str]]] = {}
     for bucket, pairs in snap.visible.items():
         for rid, day in pairs:
@@ -601,15 +595,15 @@ def vacuum_superseded(spark, pipeline_base: str, compacted_run_id: str
                       ) -> list[str]:
     """Delete the (runid, day, bucket) subtrees that a committed
     SELF-CONTAINED run superseded — the remove-orphan-files half of
-    snapshot maintenance. Deliberately scoped to partitions whose
-    AUTHORITATIVE run is ``compacted_run_id``, and that run must carry a
+    snapshot maintenance. Deliberately scoped to the closed partitions
+    where ``compacted_run_id`` is visible, and that run must carry a
     self-contained prefix (``compact`` snapshot or ``full`` reprocess):
-    only such runs are guaranteed to contain a partition's complete row
-    set, so deleting other runs' subtrees there can never lose rows (an
-    unscoped "delete non-authoritative dirs" would destroy earlier chunks
-    of chunk-committed partitions). After this, batch and incremental
-    reads of those partitions resolve identically. Returns removed
-    paths."""
+    only such a run holds everything committed before its read boundary.
+    In those partitions only the subtrees of runs that are NOT visible
+    there are deleted, so a chunk that committed while the compaction
+    ran (visible after the anchor) survives, and earlier chunks of
+    chunk-committed partitions are never touched. Reads are unchanged by
+    a vacuum. Returns removed paths."""
     from ..plans.checkpoint import (
         SELF_CONTAINED_PREFIXES,
         ManifestStore,
@@ -627,36 +621,33 @@ def vacuum_superseded(spark, pipeline_base: str, compacted_run_id: str
 
     root = f"{pipeline_base}/sinks/routed"
     snap = ManifestStore(f"{pipeline_base}/_manifest").snapshot(spark, root)
+    # closed partitions where the run is visible -> their visible runs
     owned = {
-        (day, bucket)
-        for bucket, pairs in snap.current.items()
-        for rid, day in pairs
+        (day, bucket): {r for r, d in pairs if d == day}
+        for bucket, pairs in snap.visible.items() for rid, day in pairs
         if rid == compacted_run_id and (day, bucket) in snap.closed
     }
     removed = []
     for d in fs_glob(spark, f"{root}/runid=*/category=*/day=*/bucket=*"):
         parts = d.rstrip("/").split("/")
         rid = parts[-4].split("=", 1)[1]
-        day = parts[-2].split("=", 1)[1]
-        bucket = int(parts[-1].split("=", 1)[1])
-        if rid != compacted_run_id and (day, bucket) in owned:
+        key = (parts[-2].split("=", 1)[1], int(parts[-1].split("=", 1)[1]))
+        if key in owned and rid not in owned[key]:
             fs_delete(spark, d)
             removed.append(d)
     return removed
 
 
-def partition_file_stats(
-    spark, pipeline_base: str, incremental: bool = False
-) -> DataFrame:
+def partition_file_stats(spark, pipeline_base: str) -> DataFrame:
     """Physical A8 stats for the routed layout: per (day, bucket) row,
     FILE, and BYTE counts straight from the parquet scan's ``_metadata``
     hidden column (file_path/file_size) — no driver-side filesystem
     listing, fully distributed, and partition-pruned like any other read.
     The per-file grouping happens first so file sizes are counted once,
-    not once per row. MANIFEST-GATED exactly like ``read_routed`` (same
-    incremental switch): orphaned/uncommitted run dirs and snapshots
-    superseded by a compaction never inflate the counts."""
-    df = read_routed(spark, pipeline_base, incremental=incremental).select(
+    not once per row. MANIFEST-GATED exactly like ``read_routed``:
+    orphaned/uncommitted run dirs and snapshots superseded by a
+    compaction never inflate the counts."""
+    df = read_routed(spark, pipeline_base).select(
         "day",
         "bucket",
         F.col("_metadata.file_path").alias("_fp"),

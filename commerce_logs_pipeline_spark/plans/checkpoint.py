@@ -28,7 +28,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.errors import AnalysisException
@@ -43,8 +43,8 @@ KEY = ["day", "bucket"]
 # ("compact" = maintenance snapshot from compact_routed, "full" = forced
 # whole-partition reprocess). Everything else is a CHUNK (disjoint append:
 # resume tails, streaming batch-N micro-batches). The distinction is what
-# lets incremental readers and compaction union chunk runs without double
-# counting overlapping whole-partition runs.
+# lets reads and compaction union chunk runs without double counting
+# overlapping whole-partition runs.
 SELF_CONTAINED_PREFIXES = ("compact", "full")
 
 
@@ -72,20 +72,15 @@ def new_run_id() -> str:
 @dataclass(frozen=True)
 class ManifestSnapshot:
     """Driver-side view of one manifest version — the one resolver of
-    what is committed. Per bucket, the (run_id, day) pairs that
-    incremental reads (``visible``, from ``visible_runs``) and batch reads
-    (``current``, the authoritative run of ``current_state``) resolve;
-    the (day, bucket) partitions whose status latch is ``closed``
-    (seal-only partitions included); and the routed table's schema (None
-    while no visible run holds data)."""
+    what is committed. Per bucket, the (run_id, day) pairs of the visible
+    data runs (``visible``, the ``visible_runs`` rule) that every read,
+    resume, compaction and vacuum resolves; the (day, bucket) partitions
+    whose status latch is ``closed`` (seal-only partitions included); and
+    the routed table's schema (None while no visible run holds data)."""
 
     visible: dict[int, list[tuple[str, str]]]
-    current: dict[int, list[tuple[str, str]]]
     closed: frozenset[tuple[str, int]]
     schema: StructType | None
-
-    def runs(self, incremental: bool) -> dict[int, list[tuple[str, str]]]:
-        return self.visible if incremental else self.current
 
 
 # manifest path -> (version, snapshot); see ManifestStore.snapshot
@@ -142,8 +137,9 @@ class ManifestStore:
         prefix — see SELF_CONTAINED_PREFIXES) anchors the partition and
         hides every run committed before it; chunk runs committed after
         the anchor still append; with no anchor, every committed chunk is
-        visible (disjoint appends). This is what incremental reads and
-        compaction must union — ``committed_runs`` would double-count
+        visible (disjoint appends); seal latches hold no data and are
+        never visible. This is what every read, resume, compaction and
+        vacuum resolves — ``committed_runs`` would double-count
         partitions that carry overlapping whole-partition runs (a forced
         reprocess, or a compaction whose superseded chunks have not been
         vacuumed yet).
@@ -166,39 +162,39 @@ class ManifestStore:
         of course gone (retention = what vacuum has not yet reclaimed).
 
         Scale: manifest-sized frames throughout (one row per partition
-        per run); the anchor join is broadcast."""
+        per run); the anchor is a window over the partition's runs."""
+        return self._run_flags(spark, asof).filter(
+            F.col("_visible") & F.col("_data")
+        ).select(*KEY, "run_id")
+
+    def _run_flags(self, spark: SparkSession, asof=None) -> DataFrame:
+        """One row per (day, bucket, run_id) with three flags:
+        ``_visible`` (the supersede rule of ``visible_runs``), ``_data``
+        (the run carries counts, i.e. it is not a seal latch) and
+        ``_closed`` (it carries a closed event)."""
         per_run = (
             self._log_asof(spark, asof)
             .groupBy(*KEY, "run_id")
             .agg(
                 F.max("updated_at").alias("_ts"),
                 F.min("superseded_asof").alias("_asof"),
+                F.max(F.col("rows_processed").isNotNull()).alias("_data"),
+                F.max(F.col("status") == "closed").alias("_closed"),
             )
             .withColumn("_sc", is_self_contained(F.col("run_id")))
             .withColumn("_b", F.coalesce("_asof", "_ts"))
+            # the partition's anchor: its latest self-contained run
+            .withColumn("_a", F.max(F.when(
+                F.col("_sc"), F.struct("_b", F.col("run_id").alias("_rid"))
+            )).over(Window.partitionBy(*KEY)))
         )
-        anchor = (
-            per_run.filter(F.col("_sc"))
-            .groupBy(*KEY)
-            .agg(
-                F.max(
-                    F.struct(F.col("_b"), F.col("run_id").alias("_rid"))
-                ).alias("_a")
-            )
-            .select(
-                *KEY,
-                F.col("_a._b").alias("_ab"),
-                F.col("_a._rid").alias("_arid"),
-            )
-        )
-        return (
-            per_run.join(F.broadcast(anchor), on=KEY, how="left")
-            .filter(
-                F.col("_ab").isNull()
-                | (F.col("run_id") == F.col("_arid"))
-                | ((~F.col("_sc")) & (F.col("_ts") > F.col("_ab")))
-            )
-            .select(*KEY, "run_id")
+        return per_run.select(
+            *KEY, "run_id", "_data", "_closed",
+            (
+                F.col("_a").isNull()
+                | (F.col("run_id") == F.col("_a._rid"))
+                | ((~F.col("_sc")) & (F.col("_ts") > F.col("_a._b")))
+            ).alias("_visible"),
         )
 
     def _version(self, spark: SparkSession) -> tuple:
@@ -221,16 +217,16 @@ class ManifestStore:
         ``ManifestSnapshot`` — the reference processor's in-memory map,
         rebuilt from the compacted topic only when it changed
         (blob_state_processor.go:289-375). A cache hit costs one listing
-        of the manifest dir and no Spark job; a miss collects
-        ``visible_runs`` and ``current_state`` (manifest-sized) and reads
-        one footer of ``routed_path`` for the schema. The version is taken
+        of the manifest dir and no Spark job; a miss makes one collect of
+        the per-run visibility flags (manifest-sized) and reads one footer
+        of ``routed_path`` for the schema. The version is taken
         BEFORE the fold, so a commit racing the fold can only make the
         cached snapshot newer than its key, never staler. ``asof`` reads
         bypass the cache. A manifest with no commit is the empty snapshot,
         without a read."""
         version = self._version(spark)
         if not version:
-            return ManifestSnapshot({}, {}, frozenset(), None)
+            return ManifestSnapshot({}, frozenset(), None)
         if asof is not None:
             return self._fold_snapshot(spark, routed_path, asof)
         key = (routed_path, version)
@@ -246,26 +242,20 @@ class ManifestStore:
     ) -> ManifestSnapshot:
         from ..operators.router import routed_schema
 
-        def per_bucket(rows) -> dict[int, list[tuple[str, str]]]:
-            out: dict[int, list[tuple[str, str]]] = {}
-            # a partition holding only seal latches has no data run
-            for r in sorted(rows, key=lambda r: (r["run_id"] or "", r["day"])):
-                if r["run_id"] is not None:
-                    out.setdefault(r["bucket"], []).append(
-                        (r["run_id"], r["day"])
-                    )
-            return out
-
-        visible = per_bucket(self.visible_runs(spark, asof=asof).collect())
-        state = self.current_state(spark, asof=asof).select(
-            *KEY, "run_id", "status"
+        rows = self._run_flags(spark, asof=asof).filter(
+            F.col("_visible") | F.col("_closed")
         ).collect()
+        visible: dict[int, list[tuple[str, str]]] = {}
+        for r in sorted(rows, key=lambda r: (r["run_id"], r["day"])):
+            if r["_visible"] and r["_data"]:
+                visible.setdefault(r["bucket"], []).append(
+                    (r["run_id"], r["day"])
+                )
         closed = frozenset(
-            (r["day"], r["bucket"]) for r in state if r["status"] == "closed"
+            (r["day"], r["bucket"]) for r in rows if r["_closed"]
         )
         return ManifestSnapshot(
-            visible, per_bucket(state), closed,
-            routed_schema(spark, routed_path, visible),
+            visible, closed, routed_schema(spark, routed_path, visible)
         )
 
     def seal_partitions(
@@ -281,8 +271,8 @@ class ManifestStore:
         never compactable (compact_routed only touches closed ones).
 
         The latch never reopens, so sealing is idempotent; a seal event
-        carries NULL counts so fold_manifest's latest-wins run resolution
-        ignores it (batch reads keep resolving the last DATA run). Late
+        carries NULL counts, so it is a latch, not a data run: it closes
+        the partition without ever being visible (``visible_runs``). Late
         chunks arriving after the seal are the operator's contract to
         avoid — batch resume anti-joins sealed partitions, and the
         streaming writer appends regardless (the same close-latch
@@ -382,11 +372,11 @@ def fold_manifest(log: DataFrame) -> DataFrame:
         F.sum("rows_error").alias("rows_error"),
         F.min("first_processed_ts").alias("first_processed_ts"),
         F.max("last_processed_ts").alias("last_processed_ts"),
-        # latest-wins run meta over DATA-CARRYING events only: pure latch
-        # events (seal_partitions appends status=closed with NULL counts)
-        # must flip the status without hijacking the authoritative run_id
-        # — batch reads resolve rows by this run_id, and a seal run has
-        # no data directory. max_by skips rows whose ordering key is null.
+        # latest-wins run meta over DATA-CARRYING events only (pure latch
+        # events — seal_partitions, NULL counts — flip the status but are
+        # skipped: max_by ignores rows whose ordering key is null). The
+        # column is informational: reads resolve rows from visible_runs,
+        # never from this run_id.
         F.max_by(
             "run_id",
             F.when(F.col("rows_processed").isNotNull(), F.col("updated_at")),

@@ -51,7 +51,12 @@ from .aggregate import (
     hourly_error_rollup,
     per_tool_call_rates,
 )
-from .checkpoint import ManifestStore, completion_events, new_run_id
+from .checkpoint import (
+    SELF_CONTAINED_PREFIXES,
+    ManifestStore,
+    completion_events,
+    new_run_id,
+)
 from .enrich import enrich_with_default_dims
 
 
@@ -230,13 +235,20 @@ def run_pipeline(
     # visible rather than being hidden by the later commit timestamp.
     read_asof = datetime.now(timezone.utc)
     # resume=False reprocesses WHOLE partitions, so its rows overlap any
-    # earlier commits of the same partitions: the auto-generated run id
-    # carries the "full" self-contained prefix (checkpoint.
-    # SELF_CONTAINED_PREFIXES) so incremental readers and compaction take
-    # this run as the partition's complete row set instead of unioning it
-    # with the runs it superseded. Caller-supplied run_ids declare their
-    # own intent (streaming batch-N replays are chunk appends).
-    run_id = run_id or (new_run_id() if resume else "full" + new_run_id())
+    # earlier commits of the same partitions: its run id must carry a
+    # self-contained prefix (checkpoint.SELF_CONTAINED_PREFIXES; the
+    # auto-generated one is "full") so reads and compaction take this run
+    # as the partition's complete row set instead of unioning it with the
+    # runs it superseded.
+    if run_id is None:
+        run_id = new_run_id() if resume else "full" + new_run_id()
+    elif not resume and not run_id.startswith(SELF_CONTAINED_PREFIXES):
+        raise ValueError(
+            f"a full reprocess (resume=False) run_id must carry a "
+            f"self-contained prefix ({'/'.join(SELF_CONTAINED_PREFIXES)}) "
+            f"(got {run_id!r}) — its rows overlap every earlier commit of "
+            "its partitions"
+        )
 
     # Feed and BALANCE every core: compressed text inputs can collapse to
     # few read splits, and real inputs are Zipf-skewed by conversation — a

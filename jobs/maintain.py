@@ -10,7 +10,7 @@ any Hadoop-FS URI scheme (file://, s3a://, hdfs://...).
     ... vacuum-superseded --run-id compactXYZ    # reclaim replaced dirs
     ... vacuum-orphans [--min-age-hours 1]       # expire uncommitted runs
     ... seal [--before-day 2024-01-02]           # close streamed chunk days
-    ... stats [--incremental]                    # per-partition file stats
+    ... stats                                    # per-partition file stats
 """
 
 from __future__ import annotations
@@ -47,8 +47,7 @@ def build_parser() -> argparse.ArgumentParser:
                     help="seal only days strictly before this (YYYY-MM-DD); "
                     "omit to seal every open partition")
 
-    st = sub.add_parser("stats", help="per-(day,bucket) rows/files/bytes")
-    st.add_argument("--incremental", action="store_true")
+    sub.add_parser("stats", help="per-(day,bucket) rows/files/bytes")
     return ap
 
 
@@ -83,9 +82,7 @@ def run(args, spark) -> int:
         out = {"removed": len(removed), "paths": removed}
     elif args.cmd == "stats":
         rows = (
-            partition_file_stats(
-                spark, args.base, incremental=args.incremental
-            )
+            partition_file_stats(spark, args.base)
             .orderBy("day", "bucket")
             .collect()
         )

@@ -159,8 +159,9 @@ def test_partial_progress_resume(spark, tmp_path):
 def test_offset_level_resume_within_open_partition(spark, tmp_path):
     """S2 mid-partition resume (processor.go:86-116 analog): a chunk that
     commits turns <= w with status OPEN is resumed from turn > w — already
-    committed turns are never re-parsed, and the incremental union of the
-    two chunks is byte-identical to a one-shot run."""
+    committed turns are never re-parsed, and the default readers (the
+    routed read, the per-partition stats and a conversation's point read)
+    over the two chunks equal a one-shot run."""
     base = str(tmp_path / "out")
     full = generate_transcripts(spark, 4_000, partitions=4)
 
@@ -178,11 +179,15 @@ def test_offset_level_resume_within_open_partition(spark, tmp_path):
     assert rep1.rows_in + rep2.rows_in == 4_000
     assert rep2.rows_in == 4_000 - n1
 
-    # incremental (append-visibility) read across both committed chunks
-    # equals a one-shot run, row-for-row
-    from commerce_logs_pipeline_spark.operators.router import read_routed
+    # the routed read across both committed chunks equals a one-shot run,
+    # row-for-row
+    from commerce_logs_pipeline_spark.operators.router import (
+        partition_file_stats,
+        read_conversation,
+        read_routed,
+    )
 
-    two_chunk = read_routed(spark, base, incremental=True)
+    two_chunk = read_routed(spark, base)
     assert two_chunk.count() == 4_000
     assert (
         two_chunk.select("conv_id", "turn_idx").distinct().count() == 4_000
@@ -194,6 +199,24 @@ def test_offset_level_resume_within_open_partition(spark, tmp_path):
     cols = ["conv_id", "turn_idx", "category", "role"]
     assert two_chunk.select(cols).exceptAll(one.select(cols)).count() == 0
     assert one.select(cols).exceptAll(two_chunk.select(cols)).count() == 0
+
+    # the per-partition stats and the longest conversation's point read
+    # see the same rows
+    def stats(b):
+        return sorted(map(tuple, partition_file_stats(spark, b)
+                          .select("day", "bucket", "n_rows").collect()))
+
+    assert stats(base) == stats(base_one)
+    assert sum(r[2] for r in stats(base)) == 4_000
+    cid = one.groupBy("conv_id").count().orderBy(
+        F.desc("count"), "conv_id").first()[0]
+
+    def turns(b):
+        return [tuple(r) for r in read_conversation(spark, b, cid)
+                .select(*cols).collect()]
+
+    assert turns(base) == turns(base_one)
+    assert len(turns(base)) == one.filter(F.col("conv_id") == cid).count()
 
     # the manifest watermark advanced monotonically and the latch closed
     state = ManifestStore(f"{base}/_manifest").current_state(spark)
@@ -229,7 +252,7 @@ def test_uneven_conversation_resume_no_data_loss(spark, tmp_path):
 
     from commerce_logs_pipeline_spark.operators.router import read_routed
 
-    both = read_routed(spark, base, incremental=True)
+    both = read_routed(spark, base)
     assert both.count() == 4_000
     assert both.select("conv_id", "turn_idx").distinct().count() == 4_000
 

@@ -10,10 +10,14 @@ from pyspark.sql import functions as F
 
 from commerce_logs_pipeline_spark.functions.parse import parse_transcripts
 from commerce_logs_pipeline_spark.operators.router import (
+    N_BUCKETS,
     compact_routed,
+    partition_file_stats,
+    read_conversation,
     read_routed,
     vacuum_superseded,
     vacuum_uncommitted,
+    with_partition_cols,
     write_sinks_single_pass,
 )
 from commerce_logs_pipeline_spark.plans.enrich import enrich_with_default_dims
@@ -30,7 +34,7 @@ def _routed_files(base: str) -> int:
 def test_compact_and_vacuum_roundtrip(spark, tmp_path):
     """Three chunked commits fragment every (day,bucket) into three run
     dirs; compaction must consolidate each closed partition to one file
-    per dir, preserve rows exactly, and make batch == incremental reads."""
+    per dir and preserve the read's rows exactly."""
     base = str(tmp_path / "out")
     full = generate_transcripts(spark, 4_000, partitions=4)
     run_pipeline(spark, full.filter(F.col("turn_idx") <= 1), base,
@@ -42,7 +46,7 @@ def test_compact_and_vacuum_roundtrip(spark, tmp_path):
     # materialize driver-side: the lazy plan would re-read chunk files the
     # vacuum below deletes
     before_rows = sorted(
-        map(tuple, read_routed(spark, base, incremental=True)
+        map(tuple, read_routed(spark, base)
             .select(KEY_COLS).collect())
     )
     n_before = len(before_rows)
@@ -65,23 +69,20 @@ def test_compact_and_vacuum_roundtrip(spark, tmp_path):
         )
     )
 
-    # BATCH read now resolves chunk-committed partitions correctly (the
-    # compacted run is a complete snapshot) and matches pre-compaction
-    # rows; neither read mode picks up the orphan's copies
-    for incremental in (False, True):
-        rows = sorted(
-            map(tuple, read_routed(spark, base, incremental=incremental)
-                .select(KEY_COLS).collect())
-        )
-        assert rows == before_rows
-        assert len({r[:2] for r in rows}) == n_before
+    # the read resolves the compacted run (a complete snapshot) with the
+    # pre-compaction rows and never picks up the orphan's copies
+    rows = sorted(
+        map(tuple, read_routed(spark, base).select(KEY_COLS).collect())
+    )
+    assert rows == before_rows
+    assert len({r[:2] for r in rows}) == n_before
 
-    # superseded chunk subtrees reclaimed; both read modes identical
+    # superseded chunk subtrees reclaimed; the read is unchanged
     removed = vacuum_superseded(spark, base, "compactA")
     assert removed, "chunk-run dirs should be reclaimed"
     assert _routed_files(base) < files_before
     inc_rows = sorted(
-        map(tuple, read_routed(spark, base, incremental=True)
+        map(tuple, read_routed(spark, base)
             .select(KEY_COLS).collect())
     )
     assert inc_rows == before_rows
@@ -124,7 +125,7 @@ def test_recompaction_before_vacuum_never_duplicates(spark, tmp_path):
 def test_forced_reprocess_supersedes_chunks(spark, tmp_path):
     """A forced whole-partition reprocess (resume=False) overlaps the
     chunk runs committed before it. Its auto run id carries the 'full'
-    self-contained prefix, so incremental reads and compaction take it as
+    self-contained prefix, so reads and compaction take it as
     the partition's complete row set — never chunk+full doubled."""
     base = str(tmp_path / "out")
     full = generate_transcripts(spark, 2_000, partitions=4)
@@ -132,17 +133,23 @@ def test_forced_reprocess_supersedes_chunks(spark, tmp_path):
                  run_id="chunk1", close_partitions=False)
     run_pipeline(spark, full, base, run_id="chunk2")  # closes the latch
 
+    # a caller-named full reprocess must declare itself self-contained:
+    # a chunk id would make its overlap with the chunks double-count
+    import pytest
+
+    with pytest.raises(ValueError, match="self-contained prefix"):
+        run_pipeline(spark, full, base, resume=False, run_id="chunk3")
     rep = run_pipeline(spark, full, base, resume=False)
     assert rep.run_id.startswith("full")
-    # both read modes see each row exactly once, with chunk dirs on disk
-    assert read_routed(spark, base, incremental=True).count() == 2_000
+    # the read sees each row exactly once, with chunk dirs on disk
     assert read_routed(spark, base).count() == 2_000
+    assert read_routed(spark, base).select(
+        "conv_id", "turn_idx").distinct().count() == 2_000
 
     # compaction sources ONLY the visible (full) run — r3 unioned all
     # committed runs here and permanently doubled every row
     crep = compact_routed(spark, base, run_id="compactA")
     assert read_routed(spark, base).count() == 2_000
-    assert read_routed(spark, base, incremental=True).count() == 2_000
     if crep["partitions"]:
         removed = vacuum_superseded(spark, base, "compactA")
         assert removed  # chunk + full dirs reclaimed
@@ -167,7 +174,7 @@ def test_maintenance_on_uri_scheme_base(spark, tmp_path):
 
     removed = vacuum_superseded(spark, base, "compactU")
     assert removed and all(p.startswith("file:/") for p in removed)
-    assert read_routed(spark, base, incremental=True).count() == 1_500
+    assert read_routed(spark, base).count() == 1_500
     assert vacuum_uncommitted(spark, base) == []  # nothing orphaned
 
 
@@ -223,9 +230,9 @@ def test_compact_skips_open_partitions(spark, tmp_path):
 
     with pytest.raises(ValueError, match="self-contained"):
         vacuum_superseded(spark, base, "chunk1")
-    # both chunk dirs still fully readable incrementally
+    # both chunk dirs still fully readable
     n = df.filter(F.col("turn_idx") <= 3).count()
-    assert read_routed(spark, base, incremental=True).count() == n
+    assert read_routed(spark, base).count() == n
 
 
 def test_visible_runs_read_asof_supersession(spark, tmp_path):
@@ -268,9 +275,50 @@ def test_visible_runs_read_asof_supersession(spark, tmp_path):
     assert vis2 == {"fullY"}, vis2
 
 
+def test_vacuum_keeps_chunk_committed_during_compaction(spark, tmp_path):
+    """A chunk committed while a compaction is in flight (after the
+    compactor's read boundary, before its commit) stays visible, so
+    vacuuming that compaction may delete only the runs it superseded:
+    every row stays readable and only chunk1's subtrees go."""
+    import datetime as dt
+
+    from commerce_logs_pipeline_spark.plans.checkpoint import (
+        ManifestStore,
+        completion_events,
+    )
+
+    base = str(tmp_path / "out")
+    enriched = enrich_with_default_dims(parse_transcripts(
+        generate_transcripts(spark, 2_000, partitions=4))).cache()
+    head = F.col("turn_idx") == 0
+    chunk1, late = enriched.filter(head), enriched.filter(~head)
+    # compactA holds chunk1's rows: the compactor read before chunkLate
+    runs = [("chunk1", chunk1), ("chunkLate", late), ("compactA", chunk1)]
+    for run_id, frame in runs:
+        write_sinks_single_pass(frame, f"{base}/sinks", run_id=run_id)
+
+    store = ManifestStore(f"{base}/_manifest")
+    t = lambda m: dt.datetime(2024, 1, 2, 12, m)  # noqa: E731
+    for (run_id, frame), at in zip(runs, [t(1), t(3), t(4)]):
+        events = completion_events(with_partition_cols(frame), run_id)
+        events = events.withColumn("updated_at", F.lit(at))
+        if run_id == "compactA":  # read its sources at t2
+            events = events.withColumn("superseded_asof", F.lit(t(2)))
+        store.append(events)
+
+    n = enriched.count()
+    assert read_routed(spark, base).count() == n
+    removed = vacuum_superseded(spark, base, "compactA")
+    assert removed and all("/runid=chunk1/" in p for p in removed)
+    rows = read_routed(spark, base).select("conv_id", "turn_idx")
+    assert rows.count() == rows.distinct().count() == n
+    enriched.unpersist()
+
+
 def test_maintenance_schedule_property(spark, tmp_path):
     """Interleaved chunk appends / latch close / compaction / vacuum /
-    full reprocess: the authoritative row set (read_routed incremental)
+    full reprocess: the authoritative row set (read_routed, the
+    partition_file_stats row counts and one conversation's point read)
     must equal the committed turn set after EVERY step — the supersede
     convention may never hide or duplicate a row. Deterministic schedule
     battery instead of @given: each schedule is a worst-case interleaving
@@ -290,13 +338,15 @@ def test_maintenance_schedule_property(spark, tmp_path):
         full = generate_transcripts(spark, 1_500, partitions=4)
         full = full.persist()
         max_turn = full.agg(F.max("turn_idx")).collect()[0][0]
+        target = full.groupBy("conv_id").count().orderBy(
+            F.desc("count"), "conv_id").first()[0]
         cap = -1
         compacted = None
 
         def committed_keys():
             return sorted(
                 map(tuple,
-                    read_routed(spark, base, incremental=True)
+                    read_routed(spark, base)
                     .select("conv_id", "turn_idx").collect())
             )
 
@@ -338,18 +388,54 @@ def test_maintenance_schedule_property(spark, tmp_path):
                 f"schedule {si} step {step} ({op}): "
                 f"{len(got)} rows vs expected {len(want)}"
             )
+            stats_rows = partition_file_stats(spark, base).agg(
+                F.sum("n_rows")).first()[0] or 0
+            assert stats_rows == len(want), (si, step, op)
+            turns = [r.turn_idx for r in
+                     read_conversation(spark, base, target).collect()]
+            assert turns == [t for c, t in want if c == target], (
+                si, step, op)
         full.unpersist()
 
 
+def _commit_two_chunks(spark, full, base, first, second):
+    """Commit ``full`` as two OPEN chunks: ``first`` holds every row but
+    bucket 0's turns past 1, ``second`` (a resume) exactly those, so only
+    bucket-0 partitions hold two chunks."""
+    b0 = F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)) == 0
+    run_pipeline(spark, full.filter(~b0 | (F.col("turn_idx") <= 1)), base,
+                 run_id=first, close_partitions=False)
+    run_pipeline(spark, full, base, run_id=second, close_partitions=False)
+
+
+def _partition_dirs(root: str, run_id: str) -> dict[tuple[str, int], list]:
+    """(day, bucket) -> the run's (category, day, bucket) dirs."""
+    out: dict[tuple[str, int], list] = {}
+    for d in Path(root).glob(f"runid={run_id}/category=*/day=*/bucket=*"):
+        key = (d.parent.name.split("=", 1)[1], int(d.name.split("=", 1)[1]))
+        out.setdefault(key, []).append(d)
+    return out
+
+
+def _one_file_partitions(root: str, run_id: str) -> set[tuple[str, int]]:
+    """The run's partitions whose every dir already holds one file."""
+    return {
+        k for k, dirs in _partition_dirs(root, run_id).items()
+        if all(len(list(d.glob("*.parquet"))) == 1 for d in dirs)
+    }
+
+
 def test_seal_partitions_latch_and_run_resolution(spark, tmp_path):
-    """seal_partitions closes open chunk partitions WITHOUT hijacking the
-    fold's authoritative run resolution (a seal event has no data dir);
-    sealing is idempotent and respects --before-day."""
+    """seal_partitions closes open chunk partitions with a latch that is
+    never a visible run (a seal event has no data dir); sealing is
+    idempotent and respects --before-day; compaction then rewrites the
+    sealed partitions holding two chunks and leaves alone a sealed
+    single-chunk partition that already holds one file per dir."""
     from commerce_logs_pipeline_spark.plans.checkpoint import ManifestStore
 
     base = str(tmp_path / "out")
     full = generate_transcripts(spark, 2_000, partitions=4)
-    run_pipeline(spark, full, base, run_id="chunkA", close_partitions=False)
+    _commit_two_chunks(spark, full, base, "chunkA", "chunkB")
 
     ms = ManifestStore(f"{base}/_manifest")
     root = f"{base}/sinks/routed"
@@ -369,25 +455,36 @@ def test_seal_partitions_latch_and_run_resolution(spark, tmp_path):
     # the snapshot reports the seal-only partitions as closed, and only them
     assert ms.snapshot(spark, root).closed == frozenset(sealed1)
 
-    # full seal closes the rest; authoritative run_id stays the DATA run
+    # full seal closes the rest; the fold's run_id stays a DATA run
     sealed2 = ms.seal_partitions(spark)
     assert sealed2
     st = ms.current_state(spark)
     assert st.filter(F.col("status") == "open").count() == 0
-    assert {r["run_id"] for r in st.select("run_id").collect()} == {"chunkA"}
+    assert {r["run_id"] for r in st.select("run_id").collect()} == {
+        "chunkA", "chunkB"}
     snap = ms.snapshot(spark, root)
     assert snap.closed == frozenset(sealed1) | frozenset(sealed2)
-    assert {rid for pairs in snap.current.values()
+    # seal latches are never visible: outside bucket 0 the visible runs
+    # are exactly chunkA, and bucket 0 adds only chunkB
+    assert {rid for bucket, pairs in snap.visible.items() if bucket != 0
             for rid, _ in pairs} == {"chunkA"}
+    assert {rid for pairs in snap.visible.values()
+            for rid, _ in pairs} == {"chunkA", "chunkB"}
 
     # idempotent: nothing left to seal
     assert ms.seal_partitions(spark) == []
 
-    # sealed chunks are now compactable and reads stay exact
-    before = sorted(map(tuple, read_routed(spark, base, incremental=True)
+    # sealed two-chunk partitions are compactable and reads stay exact
+    two_chunk = set(_partition_dirs(root, "chunkB"))
+    left_alone = _one_file_partitions(root, "chunkA") - two_chunk
+    assert two_chunk and left_alone
+    before = sorted(map(tuple, read_routed(spark, base)
                         .select(KEY_COLS).collect()))
     rep = compact_routed(spark, base)
     assert rep["partitions"] > 0
+    rewritten = set(_partition_dirs(root, rep["run_id"]))
+    assert two_chunk <= rewritten
+    assert not rewritten & left_alone
     after = sorted(map(tuple, read_routed(spark, base).select(KEY_COLS)
                        .collect()))
     assert after == before
@@ -403,14 +500,20 @@ def test_maintain_cli_seal(spark, tmp_path, capsys):
     import maintain
 
     base = str(tmp_path / "out")
-    run_pipeline(spark, generate_transcripts(spark, 1_000, partitions=2),
-                 base, run_id="chunkZ", close_partitions=False)
+    root = f"{base}/sinks/routed"
+    _commit_two_chunks(spark, generate_transcripts(spark, 1_000, partitions=2),
+                       base, "chunkZ", "chunkY")
+    left_alone = (_one_file_partitions(root, "chunkZ")
+                  - set(_partition_dirs(root, "chunkY")))
+    assert left_alone
     assert maintain.main(["--base", base, "seal"], spark=spark) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["sealed"] > 0
     assert maintain.main(["--base", base, "compact"], spark=spark) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["partitions"] > 0
+    # a sealed single-chunk partition with one file per dir is left alone
+    assert not set(_partition_dirs(root, rep["run_id"])) & left_alone
 
 
 def test_read_routed_time_travel(spark, tmp_path):
@@ -427,7 +530,7 @@ def test_read_routed_time_travel(spark, tmp_path):
     run_pipeline(spark, full.filter(F.col("turn_idx") <= 1), base,
                  run_id="chunk1", close_partitions=False)
     t1 = datetime.now(timezone.utc)
-    n1 = read_routed(spark, base, incremental=True).count()
+    n1 = read_routed(spark, base).count()
 
     run_pipeline(spark, full, base, run_id="chunk2")
     t2 = datetime.now(timezone.utc)
@@ -436,23 +539,21 @@ def test_read_routed_time_travel(spark, tmp_path):
     run_pipeline(spark, full, base, run_id="full3", resume=False)
 
     # asof t1: only chunk1's rows exist
-    at1 = read_routed(spark, base, incremental=True, asof=t1)
+    at1 = read_routed(spark, base, asof=t1)
     assert at1.count() == n1
     assert {r["runid"] for r in at1.select("runid").distinct().collect()} \
         == {"chunk1"}
     # asof t2: both chunks, no supersession yet
-    at2 = read_routed(spark, base, incremental=True, asof=t2)
+    at2 = read_routed(spark, base, asof=t2)
     assert at2.count() == 2_000
     assert {r["runid"] for r in at2.select("runid").distinct().collect()} \
         == {"chunk1", "chunk2"}
     # asof now == current read: the full3 snapshot only
     now = datetime.now(timezone.utc)
-    atn = read_routed(spark, base, incremental=True, asof=now)
+    atn = read_routed(spark, base, asof=now)
     assert atn.count() == 2_000
     assert {r["runid"] for r in atn.select("runid").distinct().collect()} \
         == {"full3"}
-    # batch mode honors asof too
-    assert read_routed(spark, base, asof=t1).count() == n1
 
 
 def test_sealed_partitions_are_skipped_by_batch_resume(spark, tmp_path):
@@ -474,4 +575,4 @@ def test_sealed_partitions_are_skipped_by_batch_resume(spark, tmp_path):
     # run processes nothing new
     rep = run_pipeline(spark, full, base, run_id="chunkB")
     assert rep.rows_in == 0
-    assert read_routed(spark, base, incremental=True).count() == n_early
+    assert read_routed(spark, base).count() == n_early

@@ -7,6 +7,7 @@ empty frames."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from commerce_logs_pipeline_spark.functions.parse import parse_transcripts
@@ -43,7 +44,7 @@ def test_reads_on_empty_base_return_empty_frames(spark, tmp_path):
     no visible run: both reads return empty frames with the routed
     columns instead of raising PATH_NOT_FOUND."""
     base = str(tmp_path / "out")
-    assert read_conversation(spark, base, "c1", incremental=True).select(
+    assert read_conversation(spark, base, "c1").select(
         "conv_id", "turn_idx").collect() == []
     assert read_routed(spark, base).select(
         "conv_id", "turn_idx").collect() == []
@@ -54,9 +55,8 @@ def test_reads_on_empty_base_return_empty_frames(spark, tmp_path):
                status="open", write_aggregates=False)
     absent = next(f"absent{i}" for i in range(10_000)
                   if conv_bucket(f"absent{i}") == 0)
-    for incremental in (False, True):
-        out = read_conversation(spark, base, absent, incremental=incremental)
-        assert out.select("conv_id", "turn_idx").collect() == []
+    out = read_conversation(spark, base, absent)
+    assert out.select("conv_id", "turn_idx").collect() == []
     assert read_routed(spark, base).filter(F.col("bucket") == 0).count() == 0
 
 
@@ -74,22 +74,24 @@ def test_lookup_sees_every_commit_and_survives_maintenance(spark, tmp_path):
     cut = n // 2
     commit_run(enriched.filter(F.col("turn_idx") < cut), base, "chunk0",
                status="open", write_aggregates=False)
-    head = read_conversation(spark, base, target, incremental=True)
+    head = read_conversation(spark, base, target)
     assert [r.turn_idx for r in head.collect()] == list(range(cut))
 
     commit_run(enriched.filter(F.col("turn_idx") >= cut), base, "chunk1",
                status="open", write_aggregates=False)
-    full = _rows(read_conversation(spark, base, target, incremental=True))
+    full = _rows(read_conversation(spark, base, target))
     assert [r[1] for r in full] == list(range(n))
 
     ManifestStore(f"{base}/_manifest").seal_partitions(spark)
     rep = compact_routed(spark, base)
     assert rep["partitions"] > 0
     assert vacuum_superseded(spark, base, rep["run_id"])
-    for incremental in (False, True):
-        after = read_conversation(spark, base, target,
-                                  incremental=incremental)
-        assert _rows(after) == full
+    assert _rows(read_conversation(spark, base, target)) == full
+    # the keyword survives only as the one visibility rule
+    assert _rows(read_conversation(spark, base, target,
+                                   incremental=True)) == full
+    with pytest.raises(ValueError, match="visible runs only"):
+        read_conversation(spark, base, target, incremental=False)
 
 
 def test_point_read_scans_only_visible_bucket_files(spark, tmp_path):
@@ -102,8 +104,7 @@ def test_point_read_scans_only_visible_bucket_files(spark, tmp_path):
     commit_run(enriched, base, "chunk0", status="open",
                write_aggregates=False)
     target = enriched.select("conv_id").orderBy("conv_id").first()[0]
-    expected = _rows(read_conversation(spark, base, target,
-                                       incremental=True))
+    expected = _rows(read_conversation(spark, base, target))
     assert expected
 
     write_sinks_single_pass(enriched, f"{base}/sinks", run_id="orphan0")
@@ -113,7 +114,7 @@ def test_point_read_scans_only_visible_bucket_files(spark, tmp_path):
         for r in ManifestStore(f"{base}/_manifest").visible_runs(spark)
         .filter(F.col("bucket") == bucket).collect()
     }
-    out = read_conversation(spark, base, target, incremental=True)
+    out = read_conversation(spark, base, target)
     files = out.inputFiles()
     assert files
     assert not any("runid=orphan0" in p for p in files)

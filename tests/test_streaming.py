@@ -76,7 +76,7 @@ def test_replayed_batch_commits_once(spark, input_dir, tmp_path):
     for _ in range(2):
         commit_run(frame, base, "batch-0", status="open",
                    write_aggregates=False)
-    routed = read_routed(spark, base, incremental=True)
+    routed = read_routed(spark, base)
     assert routed.count() == n
     assert routed.select("conv_id", "turn_idx").distinct().count() == n
     state = ManifestStore(f"{base}/_manifest").current_state(spark)
@@ -100,7 +100,7 @@ def test_backfill_then_tail(spark, tmp_path):
     """T5 (service.go:220-299 analog): drain the historical backlog with
     one availableNow run, then new files arrive and a SECOND run on the
     SAME checkpoint ingests exactly the tail — no reprocessing, no gaps.
-    The incremental read across both phases equals one batch over the
+    The routed read across both phases equals one batch over the
     union."""
     from commerce_logs_pipeline_spark.operators.router import read_routed
 
@@ -113,13 +113,13 @@ def test_backfill_then_tail(spark, tmp_path):
     n_backlog = backlog.filter(F.col("turn_idx") < 3).count()
     q = run_streaming_pipeline(spark, inp, base, ckpt, available_now=True)
     q.awaitTermination(300)
-    assert read_routed(spark, base, incremental=True).count() == n_backlog
+    assert read_routed(spark, base).count() == n_backlog
 
     # the "current day" keeps producing: new files land in the SAME dir
     backlog.filter(F.col("turn_idx") >= 3).write.mode("append").parquet(inp)
     q2 = run_streaming_pipeline(spark, inp, base, ckpt, available_now=True)
     q2.awaitTermination(300)
-    tailed = read_routed(spark, base, incremental=True)
+    tailed = read_routed(spark, base)
     assert tailed.count() == 5_000
     assert tailed.select("conv_id", "turn_idx").distinct().count() == 5_000
 
@@ -397,7 +397,7 @@ def test_streaming_appends_interleaved_with_live_compaction(spark, tmp_path):
     """LIVE writer + maintenance: stream half the input, run
     compact_routed + vacuum_superseded while the stream is stopped
     mid-data, stream the rest into the same table, compact again — the
-    authoritative incremental read must hold the exact input row set at
+    authoritative routed read must hold the exact input row set at
     every step (the read-asof supersession ordering under a real
     streaming writer, not just the manifest-level property test)."""
     from commerce_logs_pipeline_spark.operators.router import (
@@ -417,11 +417,14 @@ def test_streaming_appends_interleaved_with_live_compaction(spark, tmp_path):
 
     def routed_keys():
         return {(r.conv_id, r.turn_idx) for r in
-                read_routed(spark, base, incremental=True)
+                read_routed(spark, base)
                 .select("conv_id", "turn_idx").collect()}
 
-    # wave 1: first half arrives, stream drains it
-    full.filter(F.col("turn_idx") % 2 == 0).write.mode("overwrite").parquet(src)
+    # wave 1: first half arrives as 8 files, which the stream drains as
+    # two micro-batches (4 files per trigger), so the sealed partitions
+    # hold two chunk runs for compaction to consolidate
+    full.filter(F.col("turn_idx") % 2 == 0).repartition(8).write.mode(
+        "overwrite").parquet(src)
     q = run_streaming_pipeline(spark, src, base, ckpt, available_now=True)
     q.awaitTermination(300)
     half = {k for k in keys if k[1] % 2 == 0}
@@ -435,12 +438,6 @@ def test_streaming_appends_interleaved_with_live_compaction(spark, tmp_path):
     assert rep1["partitions"] > 0, "sealed chunks must be compactable"
     vacuum_superseded(spark, base, rep1["run_id"])
     assert routed_keys() == half  # maintenance never changes the row set
-    # batch (non-incremental) read now also resolves the full half set:
-    # the compacted run is self-contained
-    batch_keys = {(r.conv_id, r.turn_idx) for r in
-                  read_routed(spark, base)
-                  .select("conv_id", "turn_idx").collect()}
-    assert batch_keys == half
 
     # wave 2: rest of the data arrives as NEW files, stream resumes
     full.filter(F.col("turn_idx") % 2 == 1).write.mode("append").parquet(src)
