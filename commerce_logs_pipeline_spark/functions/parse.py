@@ -237,14 +237,27 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
     ctx = logs1["contextMap"]
     apache = f2["logs"]
 
-    _corrupt = (
+    # NOTE — the shared subtrees below (classifiers, request line, thrown,
+    # ts_ns) are deliberately NOT materialized as intermediate columns: an
+    # extra alias layer was tried (withColumns of every classifier) and
+    # measured ZERO parse-stage gain (codegen subexpression elimination
+    # already dedups the repeated subtrees within the single collapsed
+    # project), while adding one more substitution level for predicate
+    # pushdown: a downstream filter on e.g. ``category`` gets every alias
+    # inlined TRANSITIVELY when pushed through the projections, and the
+    # extra level made that composed predicate large enough to OOM
+    # GeneratePredicate's source-string builder on non-file-backed inputs
+    # (synth-expression frames in tests). Shared subtrees therefore stay
+    # plain Python expression variables — one project level, the shape
+    # that has shipped green since round 1.
+    corrupt = (
         f1["_corrupt_record"].isNotNull() | f2["_corrupt_record"].isNotNull()
     )
 
     # --- classifiers ------------------------------------------------------
-    _is_tool = F.col("_tool")["tool_name"].isNotNull()
+    is_tool = F.col("_tool")["tool_name"].isNotNull()
     # proxy classifier (extractor.go:820-832)
-    _is_proxy = ~_corrupt & (
+    is_proxy = ~corrupt & (
         apache["localServerName"].isNotNull() | apache["cache status"].isNotNull()
     )
     # HTTP-vs-app classifier (extractor.go:103-146). Key-presence checks
@@ -261,16 +274,16 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
         ctx["sourceClassName"].isNotNull()
         | ctx["sourceMethodName"].isNotNull()
     )
-    _is_http = ~_corrupt & (has_ctx_request | (http_ish & ~app_fields_in_ctx))
-    _is_app = ~_corrupt & (
+    is_http = ~corrupt & (has_ctx_request | (http_ish & ~app_fields_in_ctx))
+    is_app = ~corrupt & (
         logs1["instant"].isNotNull()
         | logs1["level"].isNotNull()
         | logs1["message"].isNotNull()
     )
-    _is_container = ~_corrupt & f2["log"].isNotNull()
+    is_container = ~corrupt & f2["log"].isNotNull()
 
     # --- request-line fields (shared by http + proxy) ---------------------
-    _request_line = F.when(_is_proxy, apache["requestFirstLine"]).otherwise(
+    request_line = F.when(is_proxy, apache["requestFirstLine"]).otherwise(
         ctx["requestLine"]
     )
 
@@ -279,7 +292,7 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
     # the object form parses to null there; fall back to the raw JSON text
     # via get_json_object (returns the serialized object — the re-marshal
     # analog). Evaluated lazily inside app/error CASE branches only.
-    _thrown = F.coalesce(
+    thrown = F.coalesce(
         logs1["thrown"], F.get_json_object(txt, "$.Logs.thrown")
     )
 
@@ -293,33 +306,12 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
     root_ts = F.coalesce(f2["@timestamp"], f2["time"])
     ts_fmt2_ns = F.unix_micros(root_ts.try_cast("timestamp")) * F.lit(1000)
 
-    _ts_ns = (
-        F.when(_is_http, ts_http_ns)
-        .when(_is_app, ts_app_ns)
-        .when(_is_proxy | _is_container, ts_fmt2_ns)
+    ts_ns = (
+        F.when(is_http, ts_http_ns)
+        .when(is_app, ts_app_ns)
+        .when(is_proxy | is_container, ts_fmt2_ns)
     )
 
-    # NOTE — deliberately NOT materialized as intermediate columns: an
-    # extra alias layer was tried (withColumns of every classifier) and
-    # measured ZERO parse-stage gain (codegen subexpression elimination
-    # already dedups the repeated subtrees within the single collapsed
-    # project), while adding one more substitution level for predicate
-    # pushdown: a downstream filter on e.g. ``category`` gets every alias
-    # inlined TRANSITIVELY when pushed through the projections, and the
-    # extra level made that composed predicate large enough to OOM
-    # GeneratePredicate's source-string builder on non-file-backed inputs
-    # (synth-expression frames in tests). Shared subtrees therefore stay
-    # plain Python expression variables — one project level, the shape
-    # that has shipped green since round 1.
-    corrupt = _corrupt
-    is_tool = _is_tool
-    is_proxy = _is_proxy
-    is_http = _is_http
-    is_app = _is_app
-    is_container = _is_container
-    request_line = _request_line
-    thrown_col = _thrown
-    ts_ns = _ts_ns
     lvl_app = extract_level(logs1["level"])
 
     method = F.regexp_extract(request_line, REQUEST_LINE_RX, 1)
@@ -347,7 +339,7 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
         .when(
             is_app
             & (lvl_app == "ERROR")
-            & thrown_col.isNotNull(),
+            & thrown.isNotNull(),
             F.lit("error"),
         )
         .when(is_proxy, F.lit("proxy"))
@@ -389,10 +381,6 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
         is_http, ctx["remoteHost"]
     )
 
-    # NB: category == "error" implies is_app (the error branch conjoins
-    # it), so the historical `is_app | (category == "error")` guards
-    # reduce to plain is_app — which also keeps the big category CASE
-    # tree out of these columns' expressions.
     level = F.when(is_app, lvl_app).when(
         is_container, extract_level(f2["log"])
     )
@@ -422,7 +410,7 @@ def parse_transcripts(df: DataFrame, use_pandas_grok: bool = True) -> DataFrame:
         # extracted HTTPRequestLog drops it (extraction.go:67-91).
         .withColumn("thread", F.when(is_app | is_http, logs1["thread"]))
         .withColumn("msg", msg)
-        .withColumn("thrown", F.when(is_app, thrown_col))
+        .withColumn("thrown", F.when(is_app, thrown))
         .withColumn("local_server_name", F.when(is_proxy, apache["localServerName"]))
         .withColumn("remote_user", F.when(is_proxy, apache["remoteUser"]))
         .withColumn("referer", F.when(is_proxy, apache["referer"]))

@@ -38,9 +38,6 @@ DEFAULT_SINKS: dict[str, list[str]] = {
 # (service.go:232-235 semantics).
 
 N_BUCKETS = 16
-# files per (category, day, bucket) dir a routed write may produce: the
-# conv-hash salt of its pre-write distribution
-WRITE_SALTS = 4
 
 
 def with_partition_cols(df: DataFrame) -> DataFrame:
@@ -194,7 +191,11 @@ def write_sinks_single_pass(
     """ONE write job, partitioned by (category, day, bucket): every sink
     lands in its category partition directories in a single pass over the
     parsed frame — the multi-output write the reference does with K Kafka
-    producers (S5), collapsed into one Spark job.
+    producers (S5), collapsed into one Spark job. It is the only writer
+    of routed run dirs: ingest (``commit_run``) writes through it
+    unsorted, and compaction (``compact_routed``) rewrites closed
+    partitions through it with ``sort_cols=("conv_id", "turn_idx")``.
+    Either way every (category, day, bucket) dir gets exactly one file.
 
     Snapshot discipline (Iceberg-commit analog without the runtime jar):
     each run writes into its OWN ``runid={run_id}`` directory with a fast
@@ -248,29 +249,18 @@ def write_sinks_single_pass(
     )
     (
         with_partition_cols(parsed)
-        # hash-distribute on the partition keys before the write (the
-        # Iceberg write.distribution-mode=hash analog): each task owns a
-        # small set of (day, bucket, salt) units and writes at most
-        # WRITE_SALTS files per partition dir instead of every task
-        # spraying files into every dir. The conv-hash salt matters at
-        # scale: with tasks >> distinct (day,bucket) groups, hash
-        # collisions otherwise leave straggler tasks holding 2-3 whole
-        # groups while other cores idle (measured as the pass-1 tail at
-        # 4x8 executors).
-        .withColumn(
-            "_wsalt", F.pmod(F.xxhash64("conv_id"), F.lit(WRITE_SALTS))
-        )
-        .repartition(n_tasks, F.col("day"), F.col("bucket"), F.col("_wsalt"))
-        .drop("_wsalt")
-        # Optional ingest-time file clustering (sort_cols): extends the
-        # writer's required partition-column sort with e.g. (conv_id,
-        # turn_idx) for parquet row-group min/max skipping on point
-        # reads. OFF by default — the wider sort key measured ~10% on
-        # pass-1 wall time (interleaved A/B at 4M turns: 27.0/29.2 s
-        # sorted vs 25.8/25.4 unsorted), and the Iceberg posture is to
-        # cluster at COMPACTION, not ingest: compact_routed applies this
-        # sort when it rewrites closed partitions, so maintained tables
-        # get the clustered layout without taxing the hot path.
+        # hash-distribute on the partition key before the write (the
+        # Iceberg write.distribution-mode=hash analog): each (day, bucket)
+        # group lands in exactly one task, so every (category, day,
+        # bucket) dir gets exactly one file instead of one per task.
+        .repartition(n_tasks, "day", "bucket")
+        # Optional file clustering (sort_cols): extends the writer's
+        # required partition-column sort with e.g. (conv_id, turn_idx)
+        # for parquet row-group min/max skipping on point reads. Ingest
+        # passes none — the wider sort key measured ~10% on pass-1 wall
+        # time (interleaved A/B at 4M turns: 27.0/29.2 s sorted vs
+        # 25.8/25.4 unsorted) — and compaction passes (conv_id, turn_idx),
+        # the Iceberg posture of clustering at COMPACTION, not ingest.
         .transform(_apply_sort_cols)
         .write.mode("overwrite")
         # static overwrite of this run's own dir (v2 task-side commit);
@@ -330,10 +320,10 @@ def read_routed(spark, pipeline_base: str, asof=None) -> DataFrame:
     Mechanism: the visible (run, day, bucket) triples come from the
     cached driver-side manifest snapshot (``ManifestStore.snapshot``; no
     fold job unless the manifest changed) and are scanned by
-    ``_scan_runs``, the one committed-run scan that resume and compaction
-    share: only the ``runid=`` dirs the snapshot references are handed to
-    the scan, with the snapshot's schema, so orphan and unreferenced run
-    dirs are never listed. A base with no commit reads as an empty frame.
+    ``_scan_runs``, the committed-run scan that resume shares: only the
+    ``runid=`` dirs the snapshot references are handed to the scan, with
+    the snapshot's schema, so orphan and unreferenced run dirs are never
+    listed. A base with no commit reads as an empty frame.
     """
     from ..plans.checkpoint import ManifestStore
 
@@ -393,9 +383,8 @@ def read_conversation(
        unioned: above it Spark lists the paths with a job of its own.
     4. **Row-group skipping**: the bucket and conv_id equalities stay on
        the plan; on compacted partitions (compact_routed clusters each
-       file by (conv_id, turn_idx); ingest-time clustering is available
-       via write_sinks_single_pass sort_cols) the pushed conv_id filter
-       prunes on tight parquet min/max footer stats.
+       file by (conv_id, turn_idx); ingest writes unsorted) the pushed
+       conv_id filter prunes on tight parquet min/max footer stats.
 
     Neither orphan or superseded run dirs nor other buckets' files are
     listed: the cost tracks the bucket's visible runs, not the table's
@@ -489,8 +478,8 @@ def compact_routed(
     number >1, or any of its partition dirs holds >1 file. Partitions
     that already hold one run with one file per dir — a compacted
     partition, or one chunk then sealed — are left alone. The sources are
-    read through ``_scan_runs``, the scan ``read_routed`` uses, so orphan
-    run dirs are never listed.
+    exactly the data files the selection globbed for those partitions'
+    visible runs, so orphan run dirs are never listed.
 
     Commit safety is inherited from the write protocol: a crash before the
     manifest append leaves an orphan run dir that ``vacuum_uncommitted``
@@ -498,10 +487,12 @@ def compact_routed(
     invisible to reads — reclaim them with
     ``vacuum_superseded(spark, base, run_id)``.
 
-    Scale: one shuffle of the compacted partitions' rows, hash-distributed
-    on the partition key so each (category, day, bucket) group lands in
-    exactly one task => exactly one output file; the driver only ever
-    handles manifest-sized partition lists and file metadata.
+    Scale: the rewrite is ``write_sinks_single_pass`` with the (conv_id,
+    turn_idx) cluster sort — one shuffle of the compacted partitions'
+    rows, hash-distributed on (day, bucket) so each group lands in
+    exactly one task => exactly one file per (category, day, bucket) dir;
+    the driver only ever handles manifest-sized partition lists and file
+    metadata.
 
     Returns {"run_id", "partitions", "files_before", "files_after"}.
     """
@@ -542,43 +533,31 @@ def compact_routed(
     if not parts:
         return {"run_id": None, "partitions": 0, "files_before": 0,
                 "files_after": 0}
-    todo = {
-        bucket: [(r, d) for r, d in pairs if (d, bucket) in parts]
-        for bucket, pairs in snap.visible.items()
-    }
-
     run_id = run_id or f"compact{new_run_id()[:8]}"
-    (
-        _scan_runs(spark, root, snap, todo)
+    sources = [f for k in sorted(parts) for f in found[k][1]]
+    write_sinks_single_pass(
         # runid is a PATH-derived partition column of the source read;
         # carrying it into the new files would bake a stale data column
         # that shadows under the new runid= dir
-        .drop("runid")
-        # one task per (category, day, bucket) group -> one file per dir
-        .repartition(F.col("category"), F.col("day"), F.col("bucket"))
-        # table sort order applied at compaction (the Iceberg posture —
-        # ingest stays unsorted/fast): cluster each rewritten file by
-        # (conv_id, turn_idx) so conv point reads (read_conversation)
-        # skip row groups on tight min/max stats, and co-located conv
-        # rows dictionary/RLE-compress better. Same single task sort the
-        # partitioned write needs anyway, wider key.
-        .sortWithinPartitions(
-            "category", "day", "bucket", "conv_id", "turn_idx"
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("category", "day", "bucket")
-        .parquet(f"{root}/runid={run_id}")
+        _read_paths(spark, root, snap.schema, sources).drop("runid"),
+        f"{pipeline_base}/sinks",
+        run_id,
+        # table sort order applied at compaction: conv point reads
+        # (read_conversation) skip row groups on tight min/max stats
+        sort_cols=("conv_id", "turn_idx"),
     )
     events = spark.createDataFrame(
-        [(d, b, "closed", None, 0, 0, 0, 0, None, None, run_id, read_asof)
-         for d, b in sorted(parts)],
-        "day string, bucket int, status string, max_turn_watermark long, "
-        "rows_processed long, rows_routed long, rows_skipped long, "
-        "rows_error long, first_processed_ts timestamp, "
-        "last_processed_ts timestamp, run_id string, "
-        "superseded_asof timestamp",
-    ).withColumn("updated_at", F.current_timestamp())
+        sorted(parts), "day string, bucket int"
+    ).withColumns({
+        "status": F.lit("closed"),
+        "run_id": F.lit(run_id),
+        # zero counts, not null: the compact run stays a data run
+        **{c: F.lit(0).cast("long") for c in (
+            "rows_processed", "rows_routed", "rows_skipped", "rows_error"
+        )},
+        "superseded_asof": F.lit(read_asof),
+        "updated_at": F.current_timestamp(),
+    })
     manifest.append(events)
     files_after = len(
         fs_glob(

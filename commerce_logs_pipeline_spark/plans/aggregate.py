@@ -136,21 +136,6 @@ def top_k_conversations(parsed: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def observe_metrics(parsed: DataFrame, name: str = "pipeline_metrics") -> DataFrame:
-    """Attach observable metrics (A4 processed/error counters analog,
-    factories.go:112-139) — collected driver-side with zero extra jobs."""
-    return parsed.observe(
-        name,
-        F.count(F.lit(1)).alias("rows_processed"),
-        F.sum(F.when(F.col("category") == "parse_error", 1).otherwise(0)).alias(
-            "parse_errors"
-        ),
-        F.sum(F.when(F.col("category") == "skipped", 1).otherwise(0)).alias(
-            "skipped"
-        ),
-    )
-
-
 def partition_stats(
     df: DataFrame,
     part_cols: tuple[str, ...] = ("day", "bucket"),

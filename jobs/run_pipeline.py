@@ -37,7 +37,12 @@ def main() -> int:
     spark = build_session(master=master, shuffle_partitions=args.shuffle_partitions)
     spark.sparkContext.setLogLevel("WARN")
     try:
-        transcripts = generate_transcripts(spark, args.turns)
+        # One synthetic day per 200k turns (1..30 days): a fixed 30-day
+        # span spreads a small input over thousands of tiny
+        # (category, day, bucket) dirs, and the per-dir write cost then
+        # dominates the run (20k turns: 2,578 dirs of ~8 rows each).
+        n_days = min(30, max(1, args.turns // 200_000))
+        transcripts = generate_transcripts(spark, args.turns, n_days=n_days)
         report = run_pipeline(
             spark,
             transcripts,

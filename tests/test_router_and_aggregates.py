@@ -188,6 +188,8 @@ def test_partition_cols(transcripts_10k):
 def test_partition_file_stats_physical(spark, tmp_path):
     """A8 physical variant: per-(day,bucket) row/file/byte counts from the
     parquet _metadata column must reconcile with logical group counts."""
+    import glob
+
     from commerce_logs_pipeline_spark.operators.router import (
         partition_file_stats,
         read_routed,
@@ -197,6 +199,14 @@ def test_partition_file_stats_physical(spark, tmp_path):
 
     base = str(tmp_path / "out")
     run_pipeline(spark, generate_transcripts(spark, 2_000, partitions=4), base)
+    # the writer's (day, bucket) distribution puts each group in one
+    # task: every (category, day, bucket) dir of the run holds one file
+    dirs = glob.glob(
+        f"{base}/sinks/routed/runid=*/category=*/day=*/bucket=*"
+    )
+    assert dirs
+    for d in dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
     stats = partition_file_stats(spark, base)
     rows = stats.collect()
     assert sum(r.n_rows for r in rows) == 2_000
@@ -213,10 +223,10 @@ def test_partition_file_stats_physical(spark, tmp_path):
 def test_write_clusters_rows_for_rowgroup_skipping(parsed_10k, tmp_path):
     """File clustering by (conv_id, turn_idx) — the Iceberg
     write.sort-order analog that makes conv point/range reads skip row
-    groups on tight parquet min/max stats. Default posture: ingest writes
-    UNSORTED (the wider sort key measured ~10% on pass-1 wall time);
-    clustering is opt-in at ingest via sort_cols and always applied by
-    compact_routed when it rewrites closed partitions. Pin: within every
+    groups on tight parquet min/max stats. Ingest writes UNSORTED (the
+    wider sort key measured ~10% on pass-1 wall time); compact_routed
+    passes sort_cols=("conv_id", "turn_idx") to the same writer when it
+    rewrites closed partitions. Pin: within every
     file written with sort_cols, conv_id is non-decreasing and turn_idx
     is non-decreasing within a conv (footer stats are tight iff the data
     is ordered)."""
